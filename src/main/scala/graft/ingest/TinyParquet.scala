@@ -3,13 +3,20 @@ package graft.ingest
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetFileWriter
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side parquet I/O for the engine's BOUNDED state manifests —
   * geometry rows, quantizer tables (nCells + nCodes rows), partition
@@ -118,24 +125,65 @@ object TinyParquet {
     */
   def read(path: String, conf: Configuration, cols: Seq[Col]): Seq[Seq[Any]] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
-            && !f.getName.startsWith("."))
-          .sortBy(_.getName)
-      else Seq(p)
-    files.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new GroupReadSupport(), f).withConf(conf).build()
+    dataFiles(p, p.getFileSystem(conf)).flatMap { f =>
+      val r = open(f, conf)
       try {
-        Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-          cols.map(c => extract(g, c))
-        }.toVector
-      } finally reader.close()
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { pages =>
+            val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+            Iterator.fill(pages.getRowCount.toInt)(rows.read())
+          }
+          .map(g => cols.map(c => extract(g, c))).toVector
+      } finally r.close()
     }
   }
+
+  /** Spark schema of the parquet table spread over `paths`, from ONE
+    * part-file footer read here on the driver — Spark's own non-merged
+    * inference (first data file in path order; Spark's row-metadata
+    * key if present, else its parquet→Spark converter), minus the
+    * Spark job `spark.read.parquet` schedules to read that one footer.
+    * `None` when no path holds a data file.
+    */
+  private[ingest] def sparkSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      if (fs.exists(path)) dataFiles(path, fs) else Nil
+    }.sortBy(_.toString).headOption.map { f =>
+      val r = open(f, conf)
+      try ParquetFileFormat.readSchemaFromFooter(new Footer(f, r.getFooter),
+        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+      finally r.close()
+    }
+  }
+
+  /** `spark.read.parquet(paths)` for engine-written state, with the
+    * schema taken from [[sparkSchema]] instead of an inference job.
+    * Paths without a data file fall through to Spark's own read (and
+    * its error for a missing or empty table).
+    */
+  def readSpark(s: SparkSession, paths: String*): DataFrame =
+    sparkSchema(s, paths).fold(s.read.parquet(paths: _*))(
+      s.read.schema(_).parquet(paths: _*))
+
+  private def dataFiles(p: Path, fs: FileSystem): Seq[Path] =
+    if (fs.getFileStatus(p).isDirectory)
+      fs.listStatus(p).toSeq.map(_.getPath)
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
+          && !f.getName.startsWith("."))
+        .sortBy(_.getName)
+    else Seq(p)
+
+  // Opened against the CALLER's Configuration: parquet-java's
+  // path-only builders start from a fresh `new Configuration()`,
+  // which re-parses Hadoop's XML resources on every manifest read.
+  private def open(f: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf, f).build())
 
   private def extract(g: Group, c: Col): Any = c match {
     case IntCol(n) => g.getInteger(n, 0)

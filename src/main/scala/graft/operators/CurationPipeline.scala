@@ -272,10 +272,7 @@ object CurationPipeline {
     // Batch 1's survivors are materialized EAGERLY, overlapped with
     // batch 2's exact/append phase (§2.6) — exactly what a real
     // incremental pipeline does (batch 1's output lands while batch 2
-    // is still being filtered). This also keeps probe 1's candidate
-    // cache effective: the probe kernel holds an LRU-of-1 candidate
-    // slot, so deferring r1 to the final action let probe 2's slot swap
-    // evict it and the anti-join re-derived the candidates from scratch.
+    // is still being filtered).
     // The probe plan is CONSTRUCTED here, before the append commits, so
     // it reads exactly the batch-1 index state.
     val r1Plan = e1.join(dropSet(path), Seq("doc_id"), "left_anti")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.ingest.FileUtils.rmr
+import graft.ingest.TinyParquet
 import graft.sources.Tables
 import graft.functions.VectorFunctions._
 
@@ -21,15 +22,15 @@ import graft.functions.VectorFunctions._
   */
 object Dedup {
 
-  // LRU-of-1 for the persisted candidate sets (see minhashPairs /
-  // incrementalNearDups docs). Known trade-off: two INTERLEAVED callers
+  // LRU-of-1 for the persisted candidate sets of the corpus self-join
+  // operators (see minhashPairs / prefixFilterPairs docs; the index
+  // probes persist nothing). Known trade-off: two INTERLEAVED callers
   // can demote each other's cache to recompute (safe — a still-
   // referenced plan just recomputes), and the last call's cache lives
   // until the next call or JVM exit. Sequential pipelines (the actual
   // usage) never hit either; a per-call release handle would buy
   // little at the cost of every call site managing lifecycle.
   private var lastCandsCache: Option[DataFrame] = None
-  private var lastProbeCache: Option[DataFrame] = None
   private var lastPrefixCache: Option[DataFrame] = None
 
   private[graft] def withShingles(docs: DataFrame): DataFrame =
@@ -860,41 +861,37 @@ object Dedup {
   private def probeCoreFromParts(histBands: DataFrame, histShingles: DataFrame,
       batchBands: DataFrame, batchShingles: DataFrame,
       threshold: Double, maxBucket: Int): DataFrame = {
-    // Bucket-size filter as a window over ONE band-table instance: a
-    // groupBy-count + self-join here would evaluate the history-side
-    // shingle+signature pass twice per call — the very pass this
-    // operator exists to avoid repeating. The window shuffles the band
-    // table once by (band, bh) and filters in the same stage.
-    val histOk = histBands
+    // Hit buckets first: the history band rows are semi-joined to the
+    // batch's (band, bh) keys BEFORE the bucket-size window, so the
+    // window shuffles only rows of buckets the batch can hit, never the
+    // whole history band table. A hit bucket keeps every one of its
+    // rows, so its count — and the maxBucket cut — is exactly the
+    // full-history one; a bucket the batch misses contributes no
+    // candidate either way. The key set is batch-bounded (≤ |batch| ×
+    // bands rows), hence broadcast: the history side streams; it is not
+    // deduplicated first, as a semi-join ignores repeated keys and a
+    // distinct would cost a shuffle stage. The count
+    // is a window over ONE band-table instance: a groupBy-count +
+    // self-join would evaluate the history band lineage (for
+    // incrementalNearDups, its shingle+signature pass) twice per call.
+    val batchKeys = batchBands.select(col("band"), col("bh"))
+    val histOk = histBands.join(broadcast(batchKeys), Seq("band", "bh"), "left_semi")
       .withColumn("_n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bh"))))
       .filter(col("_n") <= maxBucket)
       .drop("_n")
-    // Persisted (single shared slot, same pattern as minhashPairs):
-    // the candidate set feeds BOTH the broadcast hist-id reduction and
-    // the verify join — without the cache the band index + join
-    // lineage (including the history-side scan this operator exists
-    // to avoid repeating) would compute twice.
+    // ONE consumer, so nothing is persisted: the candidate pairs are
+    // batch-bounded (≤ batch keys × maxBucket) and join the history
+    // shingle scan as a broadcast — only history docs that banded with
+    // THIS batch are ever verified, with zero history-side shuffle.
     val cands = batchBands
       .select(col("doc_id").as("batch_id"), col("band"), col("bh"))
       .join(histOk.select(col("doc_id").as("hist_id"), col("band"), col("bh")),
         Seq("band", "bh"))
       .select("batch_id", "hist_id").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.synchronized {
-      lastProbeCache.foreach(_.unpersist(blocking = false))
-      lastProbeCache = Some(cands)
-    }
-    // Semi-join reduction (the dd02 verify-stage trick, load-bearing
-    // here): only history docs that banded with THIS batch need their
-    // shingles for the verify — re-shingling the full history corpus
-    // per batch would defeat the incremental design at scale. The
-    // candidate hist-id set is batch-bounded, hence broadcastable.
-    val histNeeded = cands.select(col("hist_id").as("doc_id")).distinct()
     val bSh = batchShingles.select(col("doc_id").as("batch_id"), col("shingles").as("sa"))
-    val hSh = histShingles.join(broadcast(histNeeded), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("hist_id"), col("shingles").as("sb"))
-    cands.join(bSh, "batch_id").join(hSh, "hist_id")
+    val hSh = histShingles.select(col("doc_id").as("hist_id"), col("shingles").as("sb"))
+    hSh.join(broadcast(cands), "hist_id").join(bSh, "batch_id")
       .withColumn("jaccard",
         size(array_intersect(col("sa"), col("sb"))).cast("double") /
           size(array_union(col("sa"), col("sb"))))
@@ -1202,8 +1199,8 @@ object Dedup {
     rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
     val (nh, b) = indexGeometry(s, path)
     val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-    val bands = s.read.parquet(dirs.map(_ + "/bands"): _*)
-    val sh = s.read.parquet(dirs.map(_ + "/shingles"): _*)
+    val bands = TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*)
+    val sh = TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*)
     // logical erasure: tombstoned docs are invisible to every probe —
     // including the bucket-size counts, so a forgotten boilerplate doc
     // stops inflating its bucket immediately
@@ -1234,8 +1231,8 @@ object Dedup {
     // numeric max, not the listing's lexicographic sort (b10 < b2 there)
     val newest = dirs.maxBy(d =>
       new org.apache.hadoop.fs.Path(d).getName.stripPrefix("b").toLong)
-    val bands = s.read.parquet(dirs.map(_ + "/bands"): _*)
-    val sh = s.read.parquet(dirs.map(_ + "/shingles"): _*)
+    val bands = TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*)
+    val sh = TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*)
     // tombstones filter BOTH sides: an erased doc in the newest batch
     // must neither be probed against history nor drive a drop set —
     // "invisible to every probe" (gov02) includes the probe side
@@ -1243,8 +1240,8 @@ object Dedup {
     def keep(df: DataFrame): DataFrame =
       tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
     probeCoreFromParts(keep(bands), keep(sh),
-      keep(s.read.parquet(s"$newest/bands")),
-      keep(s.read.parquet(s"$newest/shingles")
+      keep(TinyParquet.readSpark(s, s"$newest/bands")),
+      keep(TinyParquet.readSpark(s, s"$newest/shingles")
         .select(col("doc_id"), col("shingles"))),
       threshold, maxBucket)
   }
@@ -1256,8 +1253,8 @@ object Dedup {
     val dirs = graft.ingest.FileUtils.listSubdirs(s"$path/forgotten", conf)
       .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(_ + "/ids"): _*)
-      .select(col("doc_id").cast("bigint").as("doc_id")).distinct())
+    else Some(TinyParquet.readSpark(s, dirs.map(_ + "/ids"): _*)
+      .select(col("doc_id").cast("bigint").as("doc_id")))
   }
 
   /** Logical right-to-erasure: record `ids` as tombstones next to the
@@ -1349,9 +1346,9 @@ object Dedup {
       // stale bytes the sweep below would have removed. There is no
       // window in which a reader sees half an index.
       val (gen, stage) = graft.ingest.Generations.stageNextGen(path, conf)
-      keep(s.read.parquet(dirs.map(_ + "/bands"): _*))
+      keep(TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*))
         .write.parquet(s"$stage/b0/bands")
-      keep(s.read.parquet(dirs.map(_ + "/shingles"): _*))
+      keep(TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*))
         .write.parquet(s"$stage/b0/shingles")
       graft.ingest.FileUtils.touch(s"$stage/b0/_COMMITTED", conf)
       // the durable record of WHICH batches this compaction folded in
@@ -1394,7 +1391,7 @@ object Dedup {
     val stored = dirs.map { d =>
       val bid = new org.apache.hadoop.fs.Path(d).getName
         .stripPrefix("b").toLong
-      s.read.parquet(s"$d/bands").withColumn("batch_id", lit(bid))
+      TinyParquet.readSpark(s, s"$d/bands").withColumn("batch_id", lit(bid))
     }.reduce(_.unionByName(_))
     val bands = tombstoneIds(s, path)
       .fold(stored)(t => stored.join(t, Seq("doc_id"), "left_anti"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.ingest.FileUtils.rmr
+import graft.ingest.TinyParquet
 import graft.sources.Tables
 
 /** Persisted IVF-PQ vector index — the dedup side's marker-sealed
@@ -200,7 +201,7 @@ object VectorIndex {
     */
   private def loadCoded(s: SparkSession, path: String): (Similarity.IvfPqModel, DataFrame) = {
     val model = loadModel(s, path)
-    val stored = s.read.parquet(
+    val stored = TinyParquet.readSpark(s,
       committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
         .map(_ + "/codes"): _*)
     val coded = tombstoneIds(s, path)
@@ -210,20 +211,22 @@ object VectorIndex {
 
   /** Bounded query collect shared by the LUT probes: the limit(cap+1)
     * caps what can ever reach the driver BEFORE the overflow is
-    * decided. `None` = the query set exceeds the cap — the caller
-    * either ROUTES to its bulk twin (the three routed probes) or
-    * fails loudly ([[boundedQueriesStrict]], for the one probe with
-    * no bulk twin).
+    * decided, and the at most `cap` rows kept are sorted by qid HERE,
+    * on the driver — no distributed sort runs first, so a local query
+    * set (a LocalRelation) collects without a Spark job. `None` = the
+    * query set exceeds the cap — the caller either ROUTES to its bulk
+    * twin (the three routed probes) or fails loudly
+    * ([[boundedQueriesStrict]], for the one probe with no bulk twin).
     */
   private def boundedQueries(queries: DataFrame,
       extra: Seq[org.apache.spark.sql.Column],
       cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
-    val rows = queries.orderBy(col("vec_id"))
+    val rows = queries
       .select(Seq(col("vec_id").cast("long").as("qid"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
         ++ extra: _*)
       .limit(cap + 1).collect()
-    if (rows.length <= cap) Some(rows) else None
+    if (rows.length <= cap) Some(rows.sortBy(_.getLong(0))) else None
   }
 
   private def boundedQueriesStrict(queries: DataFrame,
@@ -387,8 +390,8 @@ object VectorIndex {
     val dirs = graft.ingest.FileUtils.listSubdirs(s"$path/forgotten", conf)
       .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(_ + "/ids"): _*)
-      .select(col("cid").cast("long").as("cid")).distinct())
+    else Some(TinyParquet.readSpark(s, dirs.map(_ + "/ids"): _*)
+      .select(col("cid").cast("long").as("cid")))
   }
 
   /** Logical right-to-erasure (the Dedup.forgetFromIndex contract for
@@ -416,7 +419,7 @@ object VectorIndex {
     // membership against the STORED training set (not a dense-id
     // heuristic): a rebuilt index's training ids have gaps
     val trainIds = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .join(s.read.parquet(s"$path/train_ids"), Seq("vec_id"), "left_semi")
+      .join(TinyParquet.readSpark(s, s"$path/train_ids"), Seq("vec_id"), "left_semi")
       .count()
     require(trainIds == 0L,
       s"$trainIds forget ids are quantizer-training vectors — their " +
@@ -476,9 +479,8 @@ object VectorIndex {
     graft.ingest.FileUtils.withSaveLease(path, conf) {
       val dirs = committedBatchDirs(path, conf)
       val tomb = tombstoneIds(s, path)
-      val codes = tomb.fold(s.read.parquet(dirs.map(_ + "/codes"): _*))(t =>
-        s.read.parquet(dirs.map(_ + "/codes"): _*)
-          .join(t, Seq("cid"), "left_anti"))
+      val stored = TinyParquet.readSpark(s, dirs.map(_ + "/codes"): _*)
+      val codes = tomb.fold(stored)(t => stored.join(t, Seq("cid"), "left_anti"))
       // CRASH-ATOMIC manifest swap (the Dedup.vacuumIndex protocol):
       // stage the compacted generation, flip it live with one atomic
       // marker create, sweep stale bytes only after the commit point
@@ -630,7 +632,7 @@ object VectorIndex {
     val stored = dirs.map { d =>
       val bid = new org.apache.hadoop.fs.Path(d).getName
         .stripPrefix("b").toLong
-      s.read.parquet(s"$d/codes").withColumn("batch_id", lit(bid))
+      TinyParquet.readSpark(s, s"$d/codes").withColumn("batch_id", lit(bid))
     }.reduce(_.unionByName(_))
     // tombstoned rows are invisible to every probe (loadCoded), so
     // they must not steer the rebuild trigger either — a logically

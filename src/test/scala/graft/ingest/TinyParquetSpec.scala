@@ -55,4 +55,40 @@ class TinyParquetSpec extends SparkSpec {
     assert(TinyParquet.read(dir, conf, Seq(IntCol("x"))) == Seq(Seq(9)))
     assert(spark.read.parquet(dir).collect().map(_.getInt(0)).toSeq == Seq(9))
   }
+
+  test("footer schema helper: the schema spark.read.parquet infers, from one footer") {
+    import spark.implicits._
+    val root = tmpDir("tinyparquet_schema")
+    // a Spark-written batch table of a saved index (non-nullable band
+    // literals, array<string> shingles) and the TinyParquet-written
+    // train_ids manifest (no Spark row metadata: converter path)
+    val nd = root.resolve("nd").toString
+    graft.operators.Dedup.saveNearDupIndex(
+      Seq((1L, "a b c d e"), (2L, "f g h i j")).toDF("doc_id", "text"), nd)
+    val b0 = FileUtils.listSubdirs(Generations.currentBatchesDir(nd, conf), conf).head
+    val vi = root.resolve("vi").toString
+    val r = new java.util.Random(1)
+    graft.operators.VectorIndex.saveVectorIndex((0L until 40L)
+      .map(i => (i, Seq.fill(64)(r.nextGaussian()))).toDF("vec_id", "embedding"), vi)
+    // Spark reads every file-source column as nullable, nested ones too
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case o => o
+    }
+    for (p <- Seq(s"$b0/bands", s"$b0/shingles", s"$vi/train_ids")) {
+      val inferred = spark.read.parquet(p).schema
+      assert(readSpark(spark, p).schema == inferred, p)
+      assert(sparkSchema(spark, Seq(p)).map(nullable).contains(inferred), p)
+      assert(readSpark(spark, p).collect().toSet == spark.read.parquet(p).collect().toSet, p)
+    }
+    // no data file: Spark's own read, and its own error
+    val empty = root.resolve("empty").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
+    assert(sparkSchema(spark, Seq(empty)).isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException](readSpark(spark, empty))
+    FileUtils.rmr(root.toString, conf)
+  }
 }
