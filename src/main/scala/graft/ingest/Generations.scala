@@ -157,9 +157,8 @@ object Generations {
         catch { case _: Exception => () })
   }
 
-  /** Post-commit verification shared by the self-healing appends
-    * (VectorIndex.appendVectorIndex / Dedup.appendNearDupIndex), run
-    * AFTER [[awaitNoLease]]: true ⟹ the committed batch is valid and
+  /** Post-commit verification of the self-healing append
+    * ([[BatchTree.append]]), run AFTER [[awaitNoLease]]: true ⟹ the committed batch is valid and
     * durable. Two arms:
     *
     *  - marker survived + generation unchanged + SAVE EPOCH unchanged

@@ -22,6 +22,10 @@ import graft.functions.VectorFunctions._
   */
 object Dedup {
 
+  // The near-dup index's batch tree: every batch holds a band table
+  // and a shingle table, keyed (and tombstoned) by doc_id.
+  private val Tree = graft.ingest.BatchTree("doc_id", Seq("bands", "shingles"))
+
   // LRU-of-1 for the persisted candidate sets of the corpus self-join
   // operators (see minhashPairs / prefixFilterPairs docs; the index
   // probes persist nothing). Known trade-off: two INTERLEAVED callers
@@ -917,67 +921,40 @@ object Dedup {
     * silently drop verified pairs) nor a retry duplicate rows (inflated
     * bucket counts would push buckets over maxBucket) — a poor-man's
     * transaction log, the same idea a table format's manifest commit
-    * makes atomic on object storage.
+    * makes atomic on object storage. The lifecycle itself (lease,
+    * reset, epoch) is [[graft.ingest.BatchTree.save]].
     */
   def saveNearDupIndex(corpus: DataFrame, path: String,
       numHashes: Int = 32, bands: Int = 16): Unit = {
     val hconf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    // saves are the one DESTRUCTIVE lifecycle step (replace, not
-    // append), so they run under an exclusive lease — two concurrent
-    // savers would interleave the clears and rewrites into one corrupt
-    // tree (appends don't need this: claimSeqDir isolates them)
-    graft.ingest.FileUtils.withSaveLease(path, hconf)(
-      doSaveNearDupIndex(corpus, path, numHashes, bands))
-  }
-
-  private def doSaveNearDupIndex(corpus: DataFrame, path: String,
-      numHashes: Int, bands: Int): Unit = {
-    val hconf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    // a save REPLACES any index at path: clear stale batches AND stale
-    // tombstones first — a leftover forgotten/ set from the previous
-    // index would silently hide any NEW doc that reuses an erased id
-    // from every probe (and the next vacuum would delete its rows)
-    graft.ingest.Generations.reset(path, hconf)
-    rmr(s"$path/forgotten", hconf)
-    // and any legacy flat-layout root tables: a save is the documented
-    // migration remedy, and for an index with right-to-erasure support
-    // the stale corpus bytes must not outlive it
-    rmr(s"$path/bands", hconf)
-    rmr(s"$path/shingles", hconf)
-    // geometry metadata FIRST: a probe against bands built with a
-    // different (numHashes, bands) would collide essentially at
-    // random and silently miss true near-dups — append/probe read the
-    // stored geometry instead of trusting a caller to repeat it.
-    // Driver-side write (TinyParquet): 1 row, no Spark job.
-    import graft.ingest.TinyParquet.IntCol
-    graft.ingest.TinyParquet.write(s"$path/meta", hconf,
-      Seq(IntCol("num_hashes"), IntCol("bands")),
-      Seq(Seq(numHashes, bands)))
-    commitIndexBatch(corpus, path, numHashes, bands)
-    // LAST step, still under the lease: advance the monotonic save
-    // epoch (Generations.saveEpoch). Ordering is load-bearing — the
-    // bump landing AFTER the replacement geometry is fully written is
-    // what lets appendNearDupIndex treat "epoch unchanged at verify"
-    // as proof its read geometry is the stored one (the gen-0 ABA fix).
-    graft.ingest.Generations.bumpSaveEpoch(path, hconf)
+    Tree.save(path, hconf) {
+      // and any legacy flat-layout root tables: a save is the documented
+      // migration remedy, and for an index with right-to-erasure support
+      // the stale corpus bytes must not outlive it
+      rmr(s"$path/bands", hconf)
+      rmr(s"$path/shingles", hconf)
+      // geometry metadata FIRST: a probe against bands built with a
+      // different (numHashes, bands) would collide essentially at
+      // random and silently miss true near-dups — append/probe read the
+      // stored geometry instead of trusting a caller to repeat it.
+      // Driver-side write (TinyParquet): 1 row, no Spark job.
+      import graft.ingest.TinyParquet.IntCol
+      graft.ingest.TinyParquet.write(s"$path/meta", hconf,
+        Seq(IntCol("num_hashes"), IntCol("bands")),
+        Seq(Seq(numHashes, bands)))
+      withShingleSet(corpus)(sh =>
+        Tree.commitBatch(path, hconf)(writeBatchTables(sh, _, numHashes, bands)))
+    }
   }
 
   /** Extend a persisted index with a new batch (append-only commits,
     * under the geometry the index was SAVED with — the index never
     * rewrites history; callers dedup batches upstream via the
     * key-idempotent ingestion path). Safe to retry: a failed attempt
-    * leaves only an uncommitted dir readers never see.
-    *
-    * SELF-HEALING against concurrent maintenance: after committing,
-    * the append waits out any live `_SAVING` holder
-    * (Generations.awaitNoLease) and verifies its fate — the batch
-    * either survived in an unchanged generation (which implies no
-    * save replaced the geometry: a save clears the batch trees, so
-    * our dir would be gone), or a vacuum folded it into the new
-    * generation (the durable consumed manifest says so), or it died
-    * with a replaced/swept tree and is re-committed against the
-    * CURRENT index state (geometry re-read per attempt). Nothing is
-    * lost, nothing duplicates.
+    * leaves only an uncommitted dir readers never see. SELF-HEALING
+    * against concurrent maintenance ([[graft.ingest.BatchTree.append]]):
+    * a batch that died with a replaced or swept tree is re-committed
+    * against the CURRENT geometry, re-read per attempt.
     */
   def appendNearDupIndex(batch: DataFrame, path: String): Unit = {
     val s = batch.sparkSession
@@ -985,79 +962,11 @@ object Dedup {
     rejectLegacyLayout(path, conf)
     // one shingle pass feeds every attempt (signatures re-derive only
     // if the geometry changed)
-    val sh = withShingles(batch).select(col("doc_id"), col("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        attempts += 1
-        require(attempts <= 8,
-          s"append to $path kept losing maintenance races after 8 attempts")
-        // the whole attempt tolerates exceptions: a maintenance sweep
-        // can delete the tree UNDER a mid-flight write (the marker is
-        // touched last, so a failed attempt is an invisible markerless
-        // dir); verification then sends us around again. A genuine,
-        // persistent write failure keeps failing and surfaces through
-        // the attempt bound.
-        val committed =
-          try {
-            // epoch FIRST, then geometry: a save bumps the monotonic
-            // epoch only after its replacement meta is fully written,
-            // so epoch unchanged at verify ⟹ the geometry read HERE
-            // is the stored one — closes the gen-0 ABA hole (a save's
-            // reset keeps generation 0 and the same `batches` name)
-            val epoch0 = graft.ingest.Generations.saveEpoch(path, conf)
-            val (nh, b) = indexGeometry(s, path)
-            val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-            val bdir = graft.ingest.FileUtils.claimSeqDir(base, "b", conf)
-            try {
-              writeBatchTables(sh, bdir, nh, b)
-              graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-              Some((epoch0, base, bdir))
-            } catch {
-              case _: Exception if attempts < 8 =>
-                // the marker op itself may have half-landed before the
-                // failure — best-effort removal so a retry can never
-                // double-commit into a tree that is actually live
-                try graft.ingest.FileUtils.delete(
-                  s"$bdir/_COMMITTED", recursive = false, conf): Unit
-                catch { case _: Exception => () }
-                None
-            }
-          } catch { case _: Exception if attempts < 8 => None }
-        graft.ingest.Generations.awaitNoLease(path, conf)
-        // marker survived + generation unchanged + SAVE EPOCH
-        // unchanged ⟹ no maintenance replaced the index since our
-        // geometry read: a vacuum flips the generation, and a save —
-        // which keeps gen 0 and the same dir name — always bumps the
-        // monotonic epoch, so the (num_hashes, bands) we banded under
-        // is provably the stored one. Shared verification
-        // (Generations.verifyAppendCommit): happy path stays
-        // filesystem checks only (no meta parquet re-read); the
-        // consumed arm checks the epoch TOO and fails loudly on
-        // mismatch (a consumed stale-geometry batch cannot be
-        // retracted); false sends us to the retract + retry below,
-        // which re-reads the geometry.
-        done = committed.exists { case (epoch0, base, bdir) =>
-          graft.ingest.Generations.verifyAppendCommit(path, epoch0, base,
-            bdir, "stale-geometry bands", conf)
-        }
-        // RETRACT a commit that failed verification before retrying:
-        // a dir that survived a save's reset (landed after the tree
-        // clear) holds possibly stale-geometry bands AND would be
-        // duplicated by the retry — marker delete first (one atomic
-        // op takes it out of every read), then the bytes; dirs that
-        // died with a swept tree make this a no-op.
-        if (!done) committed.foreach { case (_, _, bdir) =>
-          try {
-            graft.ingest.FileUtils.delete(
-              s"$bdir/_COMMITTED", recursive = false, conf): Unit
-            graft.ingest.FileUtils.rmr(bdir, conf)
-          } catch { case _: Exception => () }
-        }
-      }
-    } finally { sh.unpersist(blocking = false); () }
+    withShingleSet(batch)(sh =>
+      Tree.append(path, conf, "stale-geometry bands") {
+        val (nh, b) = indexGeometry(s, path)
+        bdir => writeBatchTables(sh, bdir, nh, b)
+      })
   }
 
   // An index persisted by the pre-batch-dir layout has bands/shingles
@@ -1081,26 +990,10 @@ object Dedup {
   // shingle table share lineage from a persisted shingle set —
   // unshared, every save/append would tokenize and shingle the corpus
   // twice (the very pass probeCore exists to avoid repeating)
-  // One-shot batch commit, called from the SAVE path (which holds the
-  // exclusive lease, so there is nothing to race and no verification
-  // loop — appendNearDupIndex owns the self-healing variant). The id
-  // is reserved via an atomic claim-file create BEFORE anything is
-  // written (FileUtils.claimSeqDir): two CONCURRENT appenders can
-  // never pick the same dir and interleave part files under one
-  // _COMMITTED — the corruption a bare max(existing)+1 listing
-  // allows. An abandoned claim's id is never reused, so partial files
-  // can never be mistaken for a later batch's.
-  private def commitIndexBatch(corpus: DataFrame, path: String,
-      numHashes: Int, bands: Int): Unit = {
-    val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    val bdir = graft.ingest.FileUtils.claimSeqDir(
-      graft.ingest.Generations.currentBatchesDir(path, conf), "b", conf)
-    val sh = withShingles(corpus).select(col("doc_id"), col("shingles"))
+  private def withShingleSet(docs: DataFrame)(body: DataFrame => Unit): Unit = {
+    val sh = withShingles(docs).select(col("doc_id"), col("shingles"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeBatchTables(sh, bdir, numHashes, bands)
-      graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-    } finally { sh.unpersist(blocking = false); () }
+    try body(sh) finally { sh.unpersist(blocking = false); () }
   }
 
   // The two batch tables derive from ONE persisted shingle set and are
@@ -1128,23 +1021,6 @@ object Dedup {
     r1.get; r2.get
   }
 
-  private def committedBatchDirs(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    rejectLegacyLayout(path, conf)
-    // live = committed and not retired, within the LIVE generation
-    // (Generations.currentBatchesDir — a staged vacuum tree without
-    // its gen marker is invisible here): a batch retired by
-    // [[retireIndexBatches]] is out of every read the moment its
-    // marker lands, its bytes gone at the next vacuum
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    val dirs = graft.ingest.FileUtils.listSubdirs(base, conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf) &&
-        !graft.ingest.FileUtils.exists(s"$d/_RETIRED", conf))
-    require(dirs.nonEmpty,
-      s"no live committed index batches under $base")
-    dirs
-  }
-
   /** ROLLING-WINDOW retention for the persisted index — the time-axis
     * governance half next to [[forgetFromIndex]]'s by-key path, for
     * the deployment that dedups new data against a bounded window of
@@ -1158,21 +1034,15 @@ object Dedup {
     * (whose compacted rewrite also makes the retirement permanent —
     * retired dirs are simply not carried over). Retired ids are never
     * reclaimed (claim files persist), so a retire-then-append can
-    * never resurrect an expired batch under its old id. Returns the
-    * newly retired batch ids.
+    * never resurrect an expired batch under its old id. Runs under the
+    * save lease, so it fails loudly while a save or vacuum is running.
+    * Returns the newly retired batch ids.
     */
   def retireIndexBatches(s: SparkSession, path: String,
       keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val conf = s.sparkContext.hadoopConfiguration
-    val live = committedBatchDirs(path, conf)
-      .map(d => new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong).sorted
-    val retire = live.dropRight(keepLast)
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    retire.foreach(id =>
-      graft.ingest.FileUtils.touch(s"$base/b$id/_RETIRED", conf))
-    retire
+    rejectLegacyLayout(path, conf)
+    Tree.retire(path, conf, keepLast)
   }
 
   // geometry is a 1-row manifest: read driver-side (TinyParquet), no
@@ -1198,18 +1068,11 @@ object Dedup {
     // legacy check before indexGeometry's meta read errors first
     rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
     val (nh, b) = indexGeometry(s, path)
-    val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-    val bands = TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*)
-    val sh = TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*)
     // logical erasure: tombstoned docs are invisible to every probe —
     // including the bucket-size counts, so a forgotten boilerplate doc
     // stops inflating its bucket immediately
-    val (fb, fs) = tombstoneIds(s, path) match {
-      case Some(t) => (bands.join(t, Seq("doc_id"), "left_anti"),
-        sh.join(t, Seq("doc_id"), "left_anti"))
-      case None => (bands, sh)
-    }
-    probeCore(fb, fs, batch, threshold, nh, b, maxBucket)
+    val Seq(bands, sh) = Tree.read(s, path)
+    probeCore(bands, sh, batch, threshold, nh, b, maxBucket)
   }
 
   /** Probe the NEWEST committed batch of a persisted index against the
@@ -1227,35 +1090,20 @@ object Dedup {
     */
   def probeNewestIndexBatch(s: SparkSession, path: String,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-    // numeric max, not the listing's lexicographic sort (b10 < b2 there)
-    val newest = dirs.maxBy(d =>
-      new org.apache.hadoop.fs.Path(d).getName.stripPrefix("b").toLong)
-    val bands = TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*)
-    val sh = TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*)
+    val conf = s.sparkContext.hadoopConfiguration
+    rejectLegacyLayout(path, conf)
+    val dirs = Tree.liveDirs(path, conf)
     // tombstones filter BOTH sides: an erased doc in the newest batch
     // must neither be probed against history nor drive a drop set —
     // "invisible to every probe" (gov02) includes the probe side
-    val tomb = tombstoneIds(s, path)
-    def keep(df: DataFrame): DataFrame =
-      tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    probeCoreFromParts(keep(bands), keep(sh),
-      keep(TinyParquet.readSpark(s, s"$newest/bands")),
-      keep(TinyParquet.readSpark(s, s"$newest/shingles")
-        .select(col("doc_id"), col("shingles"))),
-      threshold, maxBucket)
+    val Seq(bands, sh) = Tree.read(s, path, dirs)
+    val Seq(newBands, newSh) =
+      Tree.read(s, path, Seq(dirs.maxBy(graft.ingest.BatchTree.batchId)))
+    probeCoreFromParts(bands, sh, newBands,
+      newSh.select(col("doc_id"), col("shingles")), threshold, maxBucket)
   }
 
   // ----- right-to-erasure for the persisted index (gov02) ------------
-
-  private def tombstoneIds(s: SparkSession, path: String): Option[DataFrame] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirs = graft.ingest.FileUtils.listSubdirs(s"$path/forgotten", conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    if (dirs.isEmpty) None
-    else Some(TinyParquet.readSpark(s, dirs.map(_ + "/ids"): _*)
-      .select(col("doc_id").cast("bigint").as("doc_id")))
-  }
 
   /** Logical right-to-erasure: record `ids` as tombstones next to the
     * index (append-only, marker-sealed — the data batches' commit
@@ -1268,59 +1116,18 @@ object Dedup {
     * under the same id (recycling ids for different content across
     * replaces is a caller data-modeling error).
     */
-  def forgetFromIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // SELF-HEALING like appendNearDupIndex: a vacuum sweeps the
-    // tombstone log after folding ITS snapshot of it in, and a save
-    // clears it wholesale — a request committed inside either window
-    // could vanish before it was ever applied. Post-commit, wait out
-    // any live maintenance writer and re-record if our log entry is
-    // gone (idempotent: a tombstone for already-removed rows filters
-    // nothing). A governance request can never be silently dropped.
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 8,
-        s"forget on $path kept losing maintenance races after 8 attempts")
-      // same claim protocol as data batches: concurrent governance
-      // requests must not share an f<N> dir. The attempt tolerates
-      // exceptions — a vacuum's log sweep can delete the dir under a
-      // mid-flight write — and re-records until a committed entry
-      // survives a lease-free observation.
-      val fdir =
-        try {
-          val d = graft.ingest.FileUtils.claimSeqDir(s"$path/forgotten", "f", conf)
-          try {
-            ids.select(col("doc_id").cast("bigint").as("doc_id"))
-              .write.mode("overwrite").parquet(s"$d/ids")
-            graft.ingest.FileUtils.touch(s"$d/_COMMITTED", conf)
-            Some(d)
-          } catch {
-            case _: Exception if attempts < 8 =>
-              try graft.ingest.FileUtils.delete(
-                s"$d/_COMMITTED", recursive = false, conf): Unit
-              catch { case _: Exception => () }
-              None
-          }
-        } catch { case _: Exception if attempts < 8 => None }
-      graft.ingest.Generations.awaitNoLease(path, conf)
-      done = fdir.exists(d =>
-        graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    }
-  }
+  def forgetFromIndex(s: SparkSession, path: String, ids: DataFrame): Unit =
+    Tree.forget(path, ids, "doc_id")
 
   /** PHYSICAL erasure: rewrite the index without the tombstoned docs'
     * band and shingle rows — the GDPR-compliance half a tombstone
     * alone doesn't deliver (the forgotten text's shingles would still
     * sit in parquet). The rewrite is CRASH-ATOMIC via the Generations
-    * manifest swap (the "production deployment puts a manifest swap
-    * here" trade earlier rounds documented as open, now closed): the
-    * compacted single batch is staged as the next generation's tree
-    * and flips live with one atomic marker create — readers see
+    * manifest swap ([[graft.ingest.BatchTree.vacuum]]): readers see
     * exactly the old index or exactly the new one, never a mix and
     * never an absence. Geometry metadata is untouched (a vacuum never
-    * changes the index identity).
+    * changes the index identity). It takes the same exclusive lease
+    * saves do, so a vacuum racing a save fails loudly.
     *
     * With no tombstones outstanding this is BATCH COMPACTION: months
     * of incremental appends leave one b<N> dir per batch, and probe
@@ -1330,41 +1137,8 @@ object Dedup {
     * identical probe results (spec-pinned alongside the erasure case).
     */
   def vacuumIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // a vacuum is a destructive replace, so it takes the SAME
-    // exclusive lease saves do: a vacuum racing a save fails loudly
-    graft.ingest.FileUtils.withSaveLease(path, conf) {
-      val tomb = tombstoneIds(s, path)
-      def keep(df: DataFrame): DataFrame =
-        tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-      val dirs = committedBatchDirs(path, conf)
-      // CRASH-ATOMIC manifest swap (Generations): the compacted state
-      // is STAGED as the next generation's tree — invisible to every
-      // reader — and flips live with ONE atomic marker create; a crash
-      // before the marker leaves the old generation serving (orphan
-      // stage swept by the next vacuum), a crash after leaves only
-      // stale bytes the sweep below would have removed. There is no
-      // window in which a reader sees half an index.
-      val (gen, stage) = graft.ingest.Generations.stageNextGen(path, conf)
-      keep(TinyParquet.readSpark(s, dirs.map(_ + "/bands"): _*))
-        .write.parquet(s"$stage/b0/bands")
-      keep(TinyParquet.readSpark(s, dirs.map(_ + "/shingles"): _*))
-        .write.parquet(s"$stage/b0/shingles")
-      graft.ingest.FileUtils.touch(s"$stage/b0/_COMMITTED", conf)
-      // the durable record of WHICH batches this compaction folded in
-      // — what lets an append racing this vacuum tell "my rows live
-      // on in b0" from "my batch died with the old tree" (the
-      // commitIndexBatch retry loop)
-      graft.ingest.Generations.recordConsumed(path, gen, dirs, conf)
-      require(graft.ingest.Generations.commitGeneration(path, gen, conf),
-        s"generation $gen of $path was committed concurrently — " +
-          "another vacuum ran despite the save lease")
-      // best-effort cleanup AFTER the commit point: old generations'
-      // bytes and the now-folded-in tombstone log (applied tombstones
-      // re-filter rows the compaction already dropped — a no-op)
-      graft.ingest.Generations.sweepStale(path, conf)
-      rmr(s"$path/forgotten", conf)
-    }
+    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
+    Tree.vacuum(s, path)
   }
 
   /** BUCKET-SKEW AUDIT for the persisted near-dup index — the
@@ -1386,16 +1160,9 @@ object Dedup {
     */
   def auditIndexBuckets(s: SparkSession, path: String,
       cap: Int = 1000): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirs = committedBatchDirs(path, conf)
-    val stored = dirs.map { d =>
-      val bid = new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong
-      TinyParquet.readSpark(s, s"$d/bands").withColumn("batch_id", lit(bid))
-    }.reduce(_.unionByName(_))
-    val bands = tombstoneIds(s, path)
-      .fold(stored)(t => stored.join(t, Seq("doc_id"), "left_anti"))
-    bands.groupBy(col("batch_id"), col("band"), col("bh"))
+    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
+    Tree.readByBatch(s, path, "bands")
+      .groupBy(col("batch_id"), col("band"), col("bh"))
       .agg(count(lit(1)).as("n"))
       .groupBy("batch_id")
       .agg(sum(col("n")).cast("bigint").as("n_rows"),

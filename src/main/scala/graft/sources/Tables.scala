@@ -23,7 +23,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
   /** Read with a session-lifetime PINNED schema (see
     * [[Tables.pinnedSchema]]): parquet schema inference costs ~50 ms of
     * driver time per `spark.read.parquet` call (measured by
-    * [[graft.SchemaProbe]] — 50-72 ms inferred vs 5-8 ms with an
+    * a one-off schema probe — 50-72 ms inferred vs 5-8 ms with an
     * explicit schema), paid on EVERY table reference of every query.
     * The benchmark tables are immutable inputs, so the first inference
     * per path is authoritative for the process lifetime — exactly the
