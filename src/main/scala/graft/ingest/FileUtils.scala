@@ -87,20 +87,22 @@ object FileUtils {
     * state before rewriting), so two concurrent savers would interleave
     * deletes and writes into one corrupt tree that no marker protocol
     * downstream can repair. The second saver fails LOUDLY here instead.
-    * The lease is deleted on every exit (success or failure); only a
-    * crashed JVM leaves it behind, and then the next saver's error
-    * names the remedy (verify no saver is live, delete the lease,
-    * retry) rather than silently proceeding into a possibly half-dead
-    * writer's tree. Same local-scheme O_EXCL caveats as
+    * Saves, vacuums, retires and compactions all take this lease, and
+    * the refusal names each of them, since it cannot tell which one
+    * holds it. The lease is deleted on every exit (success or
+    * failure); only a crashed JVM leaves it behind, and then the next
+    * caller's error names the remedy (verify none is live, delete the
+    * lease, retry) rather than silently proceeding into a possibly
+    * half-dead writer's tree. Same local-scheme O_EXCL caveats as
     * [[createExclusive]].
     */
   def withSaveLease[T](root: String, conf: Configuration)(body: => T): T = {
     mkdirs(root, conf)
     val lease = s"$root/_SAVING"
     require(createExclusive(lease, conf),
-      s"another save appears to be running on $root ($lease exists); " +
-        "if its JVM crashed, verify no saver is live, delete the lease " +
-        "file, and retry")
+      s"another save, vacuum, retire or compaction appears to be running " +
+        s"on $root ($lease exists); if its JVM crashed, verify none of " +
+        "these is live, delete the lease file, and retry")
     try body
     finally delete(lease, recursive = false, conf)
   }

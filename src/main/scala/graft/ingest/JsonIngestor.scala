@@ -4,8 +4,9 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -15,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * normalize to TEXT (§1.2 contract) → tag `_source_file` lineage →
   * union heterogeneous schemas with NULL-fill → alphabetical columns.
   *
-  * Two execution modes:
+  * Three execution modes:
   *
   *  - [[ingest]] (exact): per-file schema inference and normalization,
   *    then `unionByName(allowMissingColumns)`. Preserves the reference's
@@ -44,6 +45,10 @@ import scala.jdk.CollectionConverters._
   *    file containing non-object top-level elements counts as failed
   *    (Spark's multiLine parser marks the whole file corrupt) — the
   *    exact mode handles both faithfully.
+  *
+  *  - [[ingestJsonl]] (line-delimited): one census job plans the batch
+  *    (schema, per-file record counts, failed files) and the landed
+  *    data is a plain schema-given read; whole-file failure per line.
   *
   * Spark quirks the implementation works around (discovered by test):
   *  - multiLine PERMISSIVE parsing marks the WHOLE file corrupt when any
@@ -89,7 +94,12 @@ object JsonIngestor {
 
   final case class IngestResult(data: DataFrame, report: IngestReport)
 
-  private val CorruptCol = "_graft_corrupt"
+  private[ingest] val CorruptCol = "_graft_corrupt"
+
+  /** `_source_file` lineage: the last segment of the `_source_path`
+    * column (`input_file_name()`).
+    */
+  private def sourceFile: Column = substring_index(col("_source_path"), "/", -1)
 
   /** Line-format dispatch on the DECOMPRESSED name: `batch.jsonl.gz`
     * is a jsonl file Spark's reader decompresses natively by extension.
@@ -280,13 +290,23 @@ object JsonIngestor {
     * file), line-delimited files split by byte range into parallel
     * tasks, so a single 100 GB file still fans out across a cluster.
     *
-    * One distributed scan over every matched file (no per-file driver
-    * loop); whole-file atomicity per SURVEY.md A8: any corrupt LINE
-    * marks its whole file failed (detected by grouping the corrupt-
-    * record column by `input_file_name`), and the file's good lines are
-    * dropped with it. Normalization/lineage/column-sorting follow the
-    * same §1.2 contract as [[ingestBulk]], with the same documented
-    * deviation (missing key ≡ explicit null ≡ "").
+    * One Spark job before the write, with no per-file driver loop: the
+    * [[JsonlCensus]] scans every matched file once, inferring the
+    * schema `spark.read.json` would (Spark's own per-line inference)
+    * and counting, per file, the rows its accepted lines land and its
+    * rejected lines. The report comes from those counts; `data` is a
+    * read with that schema and runs nothing until the caller's write.
+    * Whole-file atomicity per SURVEY.md A8: a rejected line (malformed
+    * text, a scalar or `null` root, an array holding a non-object or
+    * `null` element) fails its whole file, good lines included, when
+    * the batch's schema has the corrupt-record column; a batch with no
+    * data column fails every file. Quirk kept from Spark's reader: only
+    * malformed text, scalars and scalar-holding arrays add that column,
+    * so a `null` line (or `[{..}, null]`) lands as one all-"" row in a
+    * batch without them, but fails its file when any OTHER file in the
+    * batch has a malformed line. Normalization/lineage/column-sorting
+    * follow the same §1.2 contract as [[ingestBulk]], with the same
+    * documented deviation (missing key ≡ explicit null ≡ "").
     */
   def ingestJsonl(spark: SparkSession, dir: String,
       includePatterns: Seq[String] = Nil,
@@ -300,48 +320,34 @@ object JsonIngestor {
       return IngestResult(spark.emptyDataFrame,
         IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9))
     }
-    val raw = spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(files: _*)
-      .withColumn("_source_path", input_file_name())
-
-    val hasCorrupt = raw.columns.contains(CorruptCol)
-    val dataCols = raw.columns.filterNot(c => c == CorruptCol || c == "_source_path")
+    val census = JsonlCensus.run(spark, files, CorruptCol)
+    val hasCorrupt = census.schema.fieldNames.contains(CorruptCol)
+    val dataSchema = StructType(census.schema.filterNot(_.name == CorruptCol))
+    // a rejected line fails its file only when the batch's schema has
+    // the corrupt-record column; otherwise the reader lands it as one
+    // all-null row
     val badFiles: Set[String] =
       if (!hasCorrupt) Set.empty
-      else if (dataCols.isEmpty) files.toSet
-      else {
-        // the filter is corrupt-only (a salvageable line with a type
-        // mismatch still fails its file — A8 is all-or-nothing); a real
-        // data column rides along in the collected output so column
-        // pruning can't reduce the scan to the corrupt column alone,
-        // which Spark rejects
-        raw.filter(col(CorruptCol).isNotNull)
-          .select(col("_source_path"), Normalizer.qcol(dataCols.head))
-          .distinct().collect().map(_.getString(0)).toSet
-      }
+      else if (dataSchema.isEmpty) files.toSet
+      else census.files.collect { case (f, l) if l.rejected > 0 => f }.toSet
     val errors = badFiles.toSeq.sorted.map(f => FileError(f, "corrupt line in file"))
+    val total =
+      if (dataSchema.isEmpty) 0L
+      else census.files.iterator
+        .collect { case (f, l) if !badFiles(f) => l.rows + l.rejected }.sum
 
     val data =
-      if (dataCols.isEmpty) spark.emptyDataFrame
+      if (dataSchema.isEmpty) spark.emptyDataFrame
       else {
-        // No corrupt-record filter: every corrupt line's file is in
-        // badFiles, so the atomicity filter removes them all — and a
-        // residual corrupt-column reference would trip Spark's
-        // corrupt-column-only-scan restriction under aggressive pruning
-        // (e.g. a downstream count()).
-        val clean1 = if (hasCorrupt) raw.drop(CorruptCol) else raw
+        val read = spark.read.schema(dataSchema).json(files: _*)
+          .withColumn("_source_path", input_file_name())
         val clean =
-          if (badFiles.isEmpty) clean1
-          else clean1.filter(!col("_source_path").isin(badFiles.toSeq: _*))
+          if (badFiles.isEmpty) read
+          else read.filter(!col("_source_path").isin(badFiles.toSeq: _*))
         Normalizer.normalizeAll(
-          clean
-            .withColumn("_source_file", element_at(split(col("_source_path"), "/"), -1))
-            .drop("_source_path"),
+          clean.withColumn("_source_file", sourceFile).drop("_source_path"),
           passthrough = Set("_source_file"))
       }
-    val total = if (data.columns.isEmpty) 0L else data.count()
     IngestResult(data, IngestReport(
       filesDiscovered = files.size,
       filesProcessed = files.size - badFiles.size,
@@ -402,9 +408,7 @@ object JsonIngestor {
           if (badFiles.isEmpty) clean1
           else clean1.filter(!col("_source_path").isin(badFiles.toSeq: _*))
         Normalizer.normalizeAll(
-          clean
-            .withColumn("_source_file", element_at(split(col("_source_path"), "/"), -1))
-            .drop("_source_path"),
+          clean.withColumn("_source_file", sourceFile).drop("_source_path"),
           passthrough = Set("_source_file"))
       }
     val total = if (data.columns.isEmpty) 0L else data.count()
@@ -469,11 +473,10 @@ object JsonIngestor {
       .withColumn("_source_path", input_file_name())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hasCorrupt = raw.columns.contains(CorruptCol)
-    val srcFile = element_at(split(col("_source_path"), "/"), -1)
     val quarantine =
       if (hasCorrupt)
         raw.filter(col(CorruptCol).isNotNull)
-          .select(srcFile.as("_source_file"), col(CorruptCol).as("raw_line"))
+          .select(sourceFile.as("_source_file"), col(CorruptCol).as("raw_line"))
       else emptyQuarantine
     val goodRaw =
       if (hasCorrupt) raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
@@ -482,7 +485,7 @@ object JsonIngestor {
     val data =
       if (dataCols.isEmpty) spark.emptyDataFrame
       else Normalizer.normalizeAll(
-        goodRaw.withColumn("_source_file", srcFile).drop("_source_path"),
+        goodRaw.withColumn("_source_file", sourceFile).drop("_source_path"),
         passthrough = Set("_source_file"))
     val total = if (data.columns.isEmpty) 0L else data.count()
     val errors = quarantine.groupBy("_source_file").count()

@@ -32,4 +32,16 @@ class FileUtilsSpec extends AnyFunSuite {
       FileUtils.backup(dir.resolve("nope.json").toString)
     }
   }
+
+  test("a held save lease is refused naming every step that takes it") {
+    val root = tmp().toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val e = intercept[IllegalArgumentException] {
+      FileUtils.withSaveLease(root, conf)(FileUtils.withSaveLease(root, conf)(()))
+    }
+    Seq("save", "vacuum", "retire", "compaction", s"$root/_SAVING", "delete the lease")
+      .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    // the outer holder released the lease on its way out
+    assert(FileUtils.withSaveLease(root, conf)(1) == 1)
+  }
 }
