@@ -75,14 +75,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val Passes = passesFor(cpus.trim.toInt)
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness(GraftSession.builder(cpus))
     // Warm the JVM/codegen once on the smallest SF so per-query timings
     // measure the plan, not first-use classloading.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical session configuration for the graft engine.
   *
-  * Centralised so the CLI, Verify, Bench and every ScalaTest suite run
-  * with identical semantics:
+  * The only place a session is built: the CLI and web preview
+  * ([[getOrCreate]]), the harness mains Bench, Verify and Dev
+  * ([[harness]]), the benchmark package and every ScalaTest suite all
+  * start from [[builder]], so they run with identical semantics:
   *  - UTC session timezone (oracle parity with DuckDB);
   *  - AQE on (runtime coalescing + skew-join splitting — the knobs that
   *    matter once this plan runs on a real cluster instead of local[32]);
@@ -13,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    200 default (on a real cluster this would be set per-job or left
   *    to AQE's coalescing);
   *  - nanosecond parquet timestamps surfaced as longs (the events table;
-  *    see [[graft.sources.Tables]]).
+  *    see [[graft.sources.Tables]]);
+  *  - graft's SQL functions injected through [[GraftExtensions]];
   *  - state-store maintenance effectively disabled: this engine drains
   *    BOUNDED stream replays (parity queries, tests, bench passes),
   *    where background snapshot compaction buys nothing — but the
@@ -38,14 +41,16 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .config("spark.ui.enabled", "false")
 
-  /** Apply graft's required configs to an existing builder (used when the
-    * caller owns master/memory settings).
+  /** The harness mains' session: `b` over a throwaway warehouse dir, so
+    * queries that land managed tables never write into the working
+    * directory or collide with an earlier run's tables.
     */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
+  def harness(b: SparkSession.Builder = builder()): SparkSession = {
+    val s = b.config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.plans.logical.Window
+
 import graft.{Registry, SparkSpec}
 
 /** Physical-plan regression guards: the properties that make these
@@ -892,5 +894,37 @@ class PlanSpec extends SparkSpec {
       try graft.ingest.FileUtils.delete(path, recursive = true): Unit
       catch { case _: Throwable => () }
     }
+  }
+
+  test("global windows: only the allowlisted, bounded shapes run unpartitioned") {
+    // A Window with an EMPTY partition spec runs in one task, the
+    // single-partition scale smell. Each allowlisted count is bounded by
+    // construction, and the sweep must EQUAL the list, so a fixed query
+    // has to leave it. Probed on the logical plan: AQE hides
+    // executedPlan's children until execution. Building some queries
+    // runs real work (ingest queries land tables, quantizers collect),
+    // so the sweep gets its own session; streaming replays (str*) and
+    // cp01, which runs the whole curation pipeline eagerly, are skipped.
+    // Queries returning an eager localCheckpoint (hyb02, gov03/gov04,
+    // the sim1x index probes) hide their windows from any plan sweep.
+    val allowed = Map(
+      "q60_top_supplier" -> 1,     // the supplier-sized rewrite
+      "qf04_dsir_select" -> 1,     // rank over an already-LIMITed top-k
+      "txt10_bm25" -> 1,           // rank over an already-LIMITed top-k
+      "hyb01_rrf_fusion" -> 3,     // BM25, dense-leg and fused ranks over <= 20/10 LIMITed rows
+      "ir02_fusion_gain" -> 3,     // the same three top-k ranks as hyb01
+      "dq07_t_closeness" -> 1,     // over the band table
+      "dq12_coverage_gaps" -> 1,   // over the missing-calendar-day set (<= span days)
+      "qs01_quantile_sketch" -> 1) // deciles over the <= 1024-row quantile sketch
+    val s = spark.newSession()
+    val found = Registry.all
+      .filterNot(d => d.name.startsWith("str") || d.name.startsWith("cp01"))
+      .flatMap { d =>
+        val p = try d.run(s, sf0001).queryExecution.optimizedPlan
+          catch { case e: Throwable => fail(s"${d.name} did not plan", e) }
+        val n = p.collect { case w: Window if w.partitionSpec.isEmpty => w }.size
+        if (n > 0) Some(d.name -> n) else None
+      }.toMap
+    assert(found == allowed)
   }
 }
