@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Dev harness over the query registry:
   *
@@ -26,14 +26,17 @@ import org.apache.spark.sql.execution.FormattedMode
   * `profile` and `jobs` are two views of one [[JobLog]]: profile's gap
   * is wall minus the UNION of the job spans, i.e. driver, file-system
   * and planning time between jobs ("many small jobs" vs "slow jobs");
-  * `jobs` says which jobs, from where.
+  * `jobs` says which jobs, from where, and in which SQL execution.
   */
 object Dev {
-  final case class Job(id: Int, start: Long, end: Long, site: String)
+  /** `execution` is the job's `spark.sql.execution.id`, "-" outside one:
+    * broadcast and subquery jobs share a call site, not an execution.
+    */
+  final case class Job(id: Int, start: Long, end: Long, site: String, execution: String)
 
-  /** Records each job's id, span (listener-event epoch ms) and call site. */
+  /** Records each job's id, span (listener-event epoch ms), site and execution. */
   final class JobLog extends SparkListener {
-    private val starts = new ConcurrentHashMap[Integer, (Long, String)]()
+    private val starts = new ConcurrentHashMap[Integer, (Long, String, String)]()
     private val done = new ConcurrentLinkedQueue[Job]()
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       // the result stage's name carries the action call site; the
@@ -42,11 +45,13 @@ object Dev {
       val infos = js.stageInfos.sortBy(_.stageId)
       val site = infos.lastOption.map(_.name).getOrElse("?") +
         infos.dropRight(1).map(_.name).distinct.mkString(" <= [", " | ", "]")
-      starts.put(js.jobId, (js.time, site)); ()
+      val execution = Option(js.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).getOrElse("-")
+      starts.put(js.jobId, (js.time, site, execution)); ()
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = {
       val v = starts.remove(Integer.valueOf(je.jobId))
-      if (v != null) done.add(Job(je.jobId, v._1, je.time, v._2)): Unit
+      if (v != null) done.add(Job(je.jobId, v._1, je.time, v._2, v._3)): Unit
     }
 
     /** Runs `body`; returns its wall span (epoch ms) and the jobs that
@@ -101,12 +106,17 @@ object Dev {
       case "jobs" =>
         val (t0, t1, js) = measured(name)
         println(f"[jobs] $name wall=${(t1 - t0) / 1e3}%.2f n=${js.size}")
-        js.foreach(j => println(f"[jobs]   #${j.id}%-4d ${(j.end - j.start) / 1e3}%6.3f  ${j.site}"))
-        println(s"[jobs] $name by-site:")
-        js.groupBy(_.site).toSeq
-          .map { case (site, g) => (site, g.size, g.map(j => j.end - j.start).sum / 1e3) }
-          .sortBy(-_._3)
-          .foreach { case (site, n, sum) => println(f"[jobs]   n=$n%-3d sum=$sum%6.3f  $site") }
+        js.foreach(j => println(
+          f"[jobs]   #${j.id}%-4d exec=${j.execution}%-5s ${(j.end - j.start) / 1e3}%6.3f  ${j.site}"))
+        println(s"[jobs] $name by execution and site:")
+        js.groupBy(j => (j.execution, j.site)).toSeq
+          .map { case ((exec, site), g) =>
+            (exec, site, g.size, g.map(j => j.end - j.start).sum / 1e3)
+          }
+          .sortBy(-_._4)
+          .foreach { case (exec, site, n, sum) =>
+            println(f"[jobs]   exec=$exec%-5s n=$n%-3d sum=$sum%6.3f  $site")
+          }
       case _ =>
         try {
           val plan = Registry.byName(name).run(spark, sfDir).queryExecution.explainString(FormattedMode)

@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * normalize to TEXT (§1.2 contract) → tag `_source_file` lineage →
   * union heterogeneous schemas with NULL-fill → alphabetical columns.
   *
-  * Three execution modes:
+  * Four execution modes:
   *
   *  - [[ingest]] (exact): per-file schema inference and normalization,
   *    then `unionByName(allowMissingColumns)`. Preserves the reference's
@@ -35,20 +35,22 @@ import scala.jdk.CollectionConverters._
   *    error recorded. Suits directories up to ~10^4 files (one inference
   *    pass per file).
   *
-  *  - [[ingestBulk]] (scale): one `spark.read.json` over every file —
-  *    a single distributed scan, no per-file driver loop; the path for
-  *    10^6+ files / 100 TB prefixes. Whole-file failure is derived from
-  *    the corrupt-record column grouped by `input_file_name` and
-  *    dropped via a broadcast anti-join (SURVEY.md A8's whole-file-fail
-  *    rule). Deviations (documented): a key missing from one file is
+  *  - [[ingestBulk]] (scale): no per-file driver loop; the path for
+  *    10^6+ files / 100 TB prefixes, each file one document (2 GiB at
+  *    most). Deviations (documented): a key missing from one file is
   *    indistinguishable from an explicit null (both → ""), and a valid
   *    file containing non-object top-level elements counts as failed
   *    (Spark's multiLine parser marks the whole file corrupt) — the
   *    exact mode handles both faithfully.
   *
-  *  - [[ingestJsonl]] (line-delimited): one census job plans the batch
-  *    (schema, per-file record counts, failed files) and the landed
-  *    data is a plain schema-given read; whole-file failure per line.
+  *  - [[ingestJsonl]] and [[ingestJsonlRowIsolated]] (line-delimited):
+  *    the same per line; the row-isolated mode quarantines a malformed
+  *    line instead of failing its file.
+  *
+  * These three plan a batch with one Spark job, the [[JsonlCensus]]:
+  * the schema Spark's reader would infer, and per file the rows it
+  * lands and the records it rejects. `data` is a schema-given read that
+  * runs nothing until the caller's write.
   *
   * Spark quirks the implementation works around (discovered by test):
   *  - multiLine PERMISSIVE parsing marks the WHOLE file corrupt when any
@@ -58,8 +60,9 @@ import scala.jdk.CollectionConverters._
   *    object/array — the probe records each file's top-level keys and
   *    pruned keys are restored as "" columns (the reference's empty→""
   *    mapping, json_processor.py:90);
-  *  - a projection referencing only the corrupt-record column is
-  *    disallowed — the bulk corrupt-file scan includes a data column.
+  *  - a scan whose only referenced column is the corrupt-record column is
+  *    disallowed — the row-isolated data leg keeps a data column in its
+  *    filter.
   */
 object JsonIngestor {
 
@@ -113,6 +116,19 @@ object JsonIngestor {
     val p = path.stripSuffix("/")
     p.substring(p.lastIndexOf('/') + 1)
   }
+
+  private def jsonFiles(spark: SparkSession, dir: String, includePatterns: Seq[String],
+      excludePatterns: Seq[String]): Seq[String] =
+    FileScanner.discover(dir, Seq("json"), recursive = true, includePatterns,
+      excludePatterns, spark.sparkContext.hadoopConfiguration)("json")
+
+  private def emptyReport(t0: Long): IngestReport =
+    IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9)
+
+  /** Normalizes a read with `_source_path` lineage (§1.2) and tags `_source_file`. */
+  private def land(read: DataFrame): DataFrame =
+    Normalizer.normalizeAll(read.withColumn("_source_file", sourceFile).drop("_source_path"),
+      passthrough = Set("_source_file"))
 
   /** A value subtree carries a TYPE WITNESS if it contains any
     * non-null scalar. Spark's full-ratio JSON inference keeps exactly
@@ -232,9 +248,7 @@ object JsonIngestor {
       excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns,
       samplingRatio: Double = 1.0): IngestResult = {
     val t0 = System.nanoTime()
-    val files = FileScanner.discover(dir, Seq("json"), recursive = true,
-      includePatterns, excludePatterns,
-      spark.sparkContext.hadoopConfiguration)("json")
+    val files = jsonFiles(spark, dir, includePatterns, excludePatterns)
     val probes = probeFiles(spark, files)
     val errors = probes.collect { case FileProbe(f, Some(e), _, _, _, _) => FileError(f, e) }
     val good = probes.filter(_.error.isEmpty)
@@ -289,48 +303,43 @@ object JsonIngestor {
     * unlike a multiLine JSON file (one unsplittable parse task per
     * file), line-delimited files split by byte range into parallel
     * tasks, so a single 100 GB file still fans out across a cluster.
-    *
-    * One Spark job before the write, with no per-file driver loop: the
-    * [[JsonlCensus]] scans every matched file once, inferring the
-    * schema `spark.read.json` would (Spark's own per-line inference)
-    * and counting, per file, the rows its accepted lines land and its
-    * rejected lines. The report comes from those counts; `data` is a
-    * read with that schema and runs nothing until the caller's write.
-    * Whole-file atomicity per SURVEY.md A8: a rejected line (malformed
-    * text, a scalar or `null` root, an array holding a non-object or
-    * `null` element) fails its whole file, good lines included, when
-    * the batch's schema has the corrupt-record column; a batch with no
-    * data column fails every file. Quirk kept from Spark's reader: only
-    * malformed text, scalars and scalar-holding arrays add that column,
-    * so a `null` line (or `[{..}, null]`) lands as one all-"" row in a
-    * batch without them, but fails its file when any OTHER file in the
-    * batch has a malformed line. Normalization/lineage/column-sorting
-    * follow the same §1.2 contract as [[ingestBulk]], with the same
-    * documented deviation (missing key ≡ explicit null ≡ "").
     */
   def ingestJsonl(spark: SparkSession, dir: String,
       includePatterns: Seq[String] = Nil,
-      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): IngestResult = {
+      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): IngestResult =
+    atomicIngest(spark, dir, includePatterns, excludePatterns, wholeFile = false)
+
+  /** Bulk ingestion (see object doc) of every discovered JSON file. */
+  def ingestBulk(spark: SparkSession, dir: String,
+      includePatterns: Seq[String] = Nil,
+      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): IngestResult =
+    atomicIngest(spark, dir, includePatterns, excludePatterns, wholeFile = true)
+
+  /** The body of [[ingestJsonl]] and (`wholeFile`) [[ingestBulk]].
+    * Whole-file atomicity per SURVEY.md A8: a rejected record (malformed
+    * text, a scalar or `null` root, an array holding a non-object or
+    * `null` element) fails its whole file, good records included, when
+    * the batch's schema has the corrupt-record column; a batch with no
+    * data column fails every file. Quirk kept from Spark's reader: only
+    * malformed text, scalars and scalar-holding arrays add that column,
+    * so a `null` record (or `[{..}, null]`) lands as one all-"" row in a
+    * batch without them, but fails its file when any OTHER file in the
+    * batch has a malformed record.
+    */
+  private def atomicIngest(spark: SparkSession, dir: String, includePatterns: Seq[String],
+      excludePatterns: Seq[String], wholeFile: Boolean): IngestResult = {
     val t0 = System.nanoTime()
-    val files = FileScanner.discover(dir, Seq("json"), recursive = true,
-      includePatterns, excludePatterns,
-      spark.sparkContext.hadoopConfiguration)("json")
-      .filter(isJsonl)
-    if (files.isEmpty) {
-      return IngestResult(spark.emptyDataFrame,
-        IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9))
-    }
-    val census = JsonlCensus.run(spark, files, CorruptCol)
+    val files = jsonFiles(spark, dir, includePatterns, excludePatterns)
+      .filter(f => wholeFile || isJsonl(f))
+    if (files.isEmpty) return IngestResult(spark.emptyDataFrame, emptyReport(t0))
+    val census = JsonlCensus.run(spark, files, CorruptCol, wholeFile)
     val hasCorrupt = census.schema.fieldNames.contains(CorruptCol)
     val dataSchema = StructType(census.schema.filterNot(_.name == CorruptCol))
-    // a rejected line fails its file only when the batch's schema has
-    // the corrupt-record column; otherwise the reader lands it as one
-    // all-null row
     val badFiles: Set[String] =
       if (!hasCorrupt) Set.empty
       else if (dataSchema.isEmpty) files.toSet
       else census.files.collect { case (f, l) if l.rejected > 0 => f }.toSet
-    val errors = badFiles.toSeq.sorted.map(f => FileError(f, "corrupt line in file"))
+    val error = if (wholeFile) "corrupt record in file" else "corrupt line in file"
     val total =
       if (dataSchema.isEmpty) 0L
       else census.files.iterator
@@ -339,95 +348,20 @@ object JsonIngestor {
     val data =
       if (dataSchema.isEmpty) spark.emptyDataFrame
       else {
-        val read = spark.read.schema(dataSchema).json(files: _*)
+        val read = spark.read.schema(dataSchema).option("multiLine", wholeFile).json(files: _*)
           .withColumn("_source_path", input_file_name())
-        val clean =
-          if (badFiles.isEmpty) read
-          else read.filter(!col("_source_path").isin(badFiles.toSeq: _*))
-        Normalizer.normalizeAll(
-          clean.withColumn("_source_file", sourceFile).drop("_source_path"),
-          passthrough = Set("_source_file"))
+        land(if (badFiles.isEmpty) read else read.filter(!col("_source_path").isin(badFiles.toSeq: _*)))
       }
-    IngestResult(data, IngestReport(
-      filesDiscovered = files.size,
-      filesProcessed = files.size - badFiles.size,
-      filesFailed = badFiles.size,
-      totalRecords = total,
-      errors = errors,
-      elapsedSec = (System.nanoTime() - t0) / 1e9))
-  }
-
-  /** Single-pass bulk ingestion (see object doc). Whole-file failure =
-    * any corrupt record attributed to the file (SURVEY.md A8).
-    */
-  def ingestBulk(spark: SparkSession, dir: String,
-      includePatterns: Seq[String] = Nil,
-      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): IngestResult = {
-    val t0 = System.nanoTime()
-    val files = FileScanner.discover(dir, Seq("json"), recursive = true,
-      includePatterns, excludePatterns,
-      spark.sparkContext.hadoopConfiguration)("json")
-    if (files.isEmpty) {
-      return IngestResult(spark.emptyDataFrame,
-        IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9))
-    }
-    val raw = spark.read
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(files: _*)
-      .withColumn("_source_path", input_file_name())
-
-    val hasCorrupt = raw.columns.contains(CorruptCol)
-    val dataCols = raw.columns.filterNot(c => c == CorruptCol || c == "_source_path")
-    val badFiles: Set[String] =
-      if (!hasCorrupt) Set.empty
-      else if (dataCols.isEmpty) files.toSet // every file failed to parse
-      else {
-        // Spark refuses a scan whose only referenced file column is the
-        // corrupt-record column. In multiLine mode a corrupt record is
-        // the whole unparsed file, so every data column is null: the
-        // extra isNull conjunct is a semantic no-op that keeps a real
-        // data column in the scan's required schema.
-        raw.filter(col(CorruptCol).isNotNull && Normalizer.qcol(dataCols.head).isNull)
-          .select("_source_path")
-          .distinct().collect().map(_.getString(0)).toSet
-      }
-    val errors = badFiles.toSeq.sorted.map(f => FileError(f, "corrupt record in file"))
-
-    val data =
-      if (dataCols.isEmpty) spark.emptyDataFrame
-      else {
-        // No corrupt-record filter needed: in multiLine mode every
-        // corrupt row's file is in badFiles, so the file-level
-        // atomicity filter below removes them all (and keeping the
-        // corrupt column out of the plan avoids Spark's corrupt-
-        // column-only-scan restriction under aggressive pruning).
-        val clean1 = if (hasCorrupt) raw.drop(CorruptCol) else raw
-        val clean =
-          if (badFiles.isEmpty) clean1
-          else clean1.filter(!col("_source_path").isin(badFiles.toSeq: _*))
-        Normalizer.normalizeAll(
-          clean.withColumn("_source_file", sourceFile).drop("_source_path"),
-          passthrough = Set("_source_file"))
-      }
-    val total = if (data.columns.isEmpty) 0L else data.count()
-    IngestResult(data, IngestReport(
-      filesDiscovered = files.size,
-      filesProcessed = files.size - badFiles.size,
-      filesFailed = badFiles.size,
-      totalRecords = total,
-      errors = errors,
-      elapsedSec = (System.nanoTime() - t0) / 1e9))
+    IngestResult(data, IngestReport(filesDiscovered = files.size,
+      filesProcessed = files.size - badFiles.size, filesFailed = badFiles.size, totalRecords = total,
+      errors = badFiles.toSeq.sorted.map(FileError(_, error)), elapsedSec = (System.nanoTime() - t0) / 1e9))
   }
 
   /** Result of [[ingestJsonlRowIsolated]]: landed good rows, the
-    * quarantine table (`_source_file`, `raw_line`), run metrics, and a
-    * `release()` that drops the shared scan cache once both legs are
-    * materialized.
+    * quarantine table (`_source_file`, `raw_line`) and run metrics.
     */
   final case class RowIsolatedResult(data: DataFrame, quarantine: DataFrame,
-      report: IngestReport, release: () => Unit)
+      report: IngestReport)
 
   /** Row-level error isolation — the EXTENSION contract next to the
     * reference's whole-file atomicity (A8, [[ingestJsonl]]): a
@@ -439,66 +373,51 @@ object JsonIngestor {
     * must not discard a shard, and the quarantine table is the triage
     * queue an operator replays after fixing the producer.
     *
-    * One PERMISSIVE scan feeds BOTH legs; it is persisted for the call
-    * (a) so good rows and quarantine don't re-parse the corpus, and
-    * (b) because Spark refuses a file scan whose only referenced
-    * column is the internal corrupt-record column — the cache
-    * materializes the full schema once. Call `release()` after
-    * materializing both legs. `filesFailed` stays 0 by construction;
-    * per-file quarantined-line counts land in `errors` (bounded by
-    * file count, the same driver-side order as the listing itself).
+    * Both legs are lazy reads. `data` is the reader's rows with a null
+    * corrupt-record column; `quarantine` is a text read of the lines the
+    * census rejects, empty when the batch has no corrupt-record column
+    * (a `null` line then lands as an all-"" row, as in [[ingestJsonl]]).
+    * `filesFailed` stays 0 by construction; `errors` counts each file's
+    * quarantined lines.
     */
   def ingestJsonlRowIsolated(spark: SparkSession, dir: String,
       includePatterns: Seq[String] = Nil,
       excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): RowIsolatedResult = {
     val t0 = System.nanoTime()
-    val files = FileScanner.discover(dir, Seq("json"), recursive = true,
-      includePatterns, excludePatterns,
-      spark.sparkContext.hadoopConfiguration)("json")
-      .filter(isJsonl)
-    def emptyQuarantine: DataFrame = {
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("_source_file", StringType),
-          StructField("raw_line", StringType))))
-    }
-    if (files.isEmpty) {
-      return RowIsolatedResult(spark.emptyDataFrame, emptyQuarantine,
-        IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9), () => ())
-    }
-    val raw = spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(files: _*)
-      .withColumn("_source_path", input_file_name())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hasCorrupt = raw.columns.contains(CorruptCol)
-    val quarantine =
-      if (hasCorrupt)
-        raw.filter(col(CorruptCol).isNotNull)
-          .select(sourceFile.as("_source_file"), col(CorruptCol).as("raw_line"))
-      else emptyQuarantine
-    val goodRaw =
-      if (hasCorrupt) raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
-      else raw
-    val dataCols = goodRaw.columns.filterNot(_ == "_source_path")
+    val files = jsonFiles(spark, dir, includePatterns, excludePatterns).filter(isJsonl)
+    val emptyQuarantine = spark.createDataFrame(Seq.empty[(String, String)]).toDF("_source_file", "raw_line")
+    if (files.isEmpty) return RowIsolatedResult(spark.emptyDataFrame, emptyQuarantine, emptyReport(t0))
+    val census = JsonlCensus.run(spark, files, CorruptCol)
+    val hasCorrupt = census.schema.fieldNames.contains(CorruptCol)
+    val dataCols = census.schema.fieldNames.filterNot(_ == CorruptCol)
+    val lines = census.files.values
+    val total =
+      if (dataCols.isEmpty) 0L
+      else lines.map(_.rows).sum + (if (hasCorrupt) 0L else lines.map(_.rejected).sum)
+    val errors =
+      if (!hasCorrupt) Nil
+      else census.files.toSeq.collect { case (f, l) if l.rejected > 0 => basename(f) -> l.rejected }
+        .groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+        .map { case (f, n) => FileError(f, s"$n quarantined line(s)") }
+
     val data =
       if (dataCols.isEmpty) spark.emptyDataFrame
-      else Normalizer.normalizeAll(
-        goodRaw.withColumn("_source_file", sourceFile).drop("_source_path"),
-        passthrough = Set("_source_file"))
-    val total = if (data.columns.isEmpty) 0L else data.count()
-    val errors = quarantine.groupBy("_source_file").count()
-      .collect().map(r => FileError(r.getString(0), s"${r.getLong(1)} quarantined line(s)"))
-      .sortBy(_.file).toSeq
-    RowIsolatedResult(data, quarantine,
-      IngestReport(
-        filesDiscovered = files.size,
-        filesProcessed = files.size,
-        filesFailed = 0,
-        totalRecords = total,
-        errors = errors,
-        elapsedSec = (System.nanoTime() - t0) / 1e9),
-      () => { raw.unpersist(blocking = false); () })
+      else {
+        val read = spark.read.schema(census.schema)
+          .option("columnNameOfCorruptRecord", CorruptCol).json(files: _*)
+          .withColumn("_source_path", input_file_name())
+        // the data-column conjunct is always true; it keeps a data column
+        // in the scan when the caller's action needs none (a count)
+        val keep = Normalizer.qcol(dataCols.head)
+        land(if (!hasCorrupt) read
+          else read.filter(col(CorruptCol).isNull && (keep.isNull || keep.isNotNull)).drop(CorruptCol))
+      }
+    val quarantine =
+      if (!hasCorrupt) emptyQuarantine
+      else JsonlCensus.rejectedLines(spark, files, CorruptCol)
+        .select(sourceFile.as("_source_file"), col("raw_line"))
+    RowIsolatedResult(data, quarantine, IngestReport(filesDiscovered = files.size,
+      filesProcessed = files.size, filesFailed = 0, totalRecords = total, errors = errors,
+      elapsedSec = (System.nanoTime() - t0) / 1e9))
   }
 }

@@ -788,14 +788,9 @@ object Ingestion {
   // read_json for the clean ones.
   private val ing17 = QueryDef(
     "ing17_jsonl_row_quarantine",
-    (s, _) => {
-      val r = JsonIngestor.ingestJsonlRowIsolated(s, JsonlFixtureDir)
-      val out = r.data
-        .orderBy(col("_source_file"), col("session_id"), col("metric"), col("ts_day"))
-        .localCheckpoint(eager = true)
-      r.release()
-      out
-    },
+    (s, _) =>
+      JsonIngestor.ingestJsonlRowIsolated(s, JsonlFixtureDir).data
+        .orderBy(col("_source_file"), col("session_id"), col("metric"), col("ts_day")),
     Some(s"""WITH e AS (SELECT COALESCE(device, '') AS device, COALESCE(event, '') AS event,
           COALESCE(CAST(session_id AS VARCHAR), '') AS session_id,
           COALESCE("user", '') AS "user", 'events.jsonl' AS _source_file

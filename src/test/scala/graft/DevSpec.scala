@@ -1,5 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{broadcast, col}
+
 class DevSpec extends SparkSpec {
 
   test("covered: overlapping, nested and disjoint spans count once, clipped to the window") {
@@ -34,5 +40,39 @@ class DevSpec extends SparkSpec {
       val (_, _, next) = log.record(spark.sparkContext)(())
       assert(next.forall(_.id > jobs.map(_.id).max))
     } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("JobLog keys each job to the SQL execution that started it") {
+    val log = new Dev.JobLog
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val sql = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.add(s.executionId); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(log)
+    spark.sparkContext.addSparkListener(sql)
+    try {
+      val (_, _, jobs) = log.record(spark.sparkContext) {
+        executions.clear() // events queued before the record
+        // a broadcast join: the build side runs as its own job
+        val small = spark.range(10).withColumnRenamed("id", "k")
+        spark.range(1000).join(broadcast(small), col("id") === col("k"))
+          .selectExpr("sum(id)").collect(): Unit
+      }
+      val started = executions.asScala.map(_.toString).toSet
+      assert(started.size == 1, s"executions $started")
+      assert(jobs.size >= 2, s"jobs $jobs")
+      assert(jobs.map(_.execution).toSet == started)
+      // a job outside any SQL execution carries none
+      val (_, _, plain) = log.record(spark.sparkContext) {
+        spark.sparkContext.parallelize(1 to 3).count(): Unit
+      }
+      assert(plain.map(_.execution) == Seq("-"))
+    } finally {
+      spark.sparkContext.removeSparkListener(sql)
+      spark.sparkContext.removeSparkListener(log)
+    }
   }
 }

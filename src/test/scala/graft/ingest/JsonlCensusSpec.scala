@@ -10,7 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graft.SparkInternals
 
 /** [[JsonIngestor.ingestJsonl]] plans its batch with one census job
-  * ([[JsonlCensus]]). Each case pins the census schema to
+  * ([[JsonlCensus]]), as do the bulk and row-isolated modes. Each case pins the census schema to
   * `spark.read.json`'s, and the report and landed rows to the values
   * the reader-driven implementation (inference, `count()`, bad-file
   * query) produced for the same files.
@@ -156,18 +156,36 @@ class JsonlCensusSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  // runs `body`, asserting that it starts exactly `n` jobs
+  private def jobs[T](n: Int, what: String)(body: => T): T = {
+    val (r, started) = jobsDuring(body)
+    assert(started.size == n, s"$what started jobs ${started.map(_.jobId)}")
+    r
+  }
+
   test("one Spark job per batch, clean or corrupt; resolving the data starts none") {
     val clean = batch("a.jsonl" -> "{\"a\":1}\n{\"a\":2}\n", "b.jsonl" -> "{\"b\":\"x\"}\n")
     val corrupt = batch("a.jsonl" -> "{\"a\":1}\n{bad\n", "b.jsonl" -> "{\"b\":\"x\"}\n")
+    val cleanDoc = batch("a.json" -> "[{\"a\":1},{\"a\":2}]", "b.json" -> "{\"b\":\"x\"}")
+    val corruptDoc = batch("a.json" -> "[{\"a\":1},\n{bad", "b.json" -> "{\"b\":\"x\"}")
     for ((dir, failed) <- Seq(clean -> 0, corrupt -> 1)) {
-      val (r, jobs) = jobsDuring(JsonIngestor.ingestJsonl(spark, dir.toString))
-      val ids = jobs.map(_.jobId)
-      assert(ids.size == 1, s"ingestJsonl started jobs $ids")
+      val r = jobs(1, "ingestJsonl")(JsonIngestor.ingestJsonl(spark, dir.toString))
       assert(r.report.filesFailed == failed)
-      val (_, resolve) = jobsDuring(r.data.queryExecution.optimizedPlan)
-      val resolveIds = resolve.map(_.jobId)
-      assert(resolveIds.isEmpty, s"resolving the data started jobs $resolveIds")
+      jobs(0, "resolving the data")(r.data.queryExecution.optimizedPlan)
       assert(r.data.count() == r.report.totalRecords)
+    }
+    for ((dir, failed) <- Seq(cleanDoc -> 0, corruptDoc -> 1)) {
+      val r = jobs(1, "ingestBulk")(JsonIngestor.ingestBulk(spark, dir.toString))
+      assert(r.report.filesFailed == failed)
+      jobs(0, "resolving the data")(r.data.queryExecution.optimizedPlan)
+      assert(r.data.count() == r.report.totalRecords)
+    }
+    for ((dir, quarantined) <- Seq(clean -> 0, corrupt -> 1)) {
+      val r = jobs(1, "ingestJsonlRowIsolated")(JsonIngestor.ingestJsonlRowIsolated(spark, dir.toString))
+      jobs(0, "resolving the data")(r.data.queryExecution.optimizedPlan)
+      jobs(0, "resolving the quarantine")(r.quarantine.queryExecution.optimizedPlan)
+      assert(r.data.count() == r.report.totalRecords)
+      assert(r.quarantine.count() == quarantined)
     }
   }
 }

@@ -59,26 +59,22 @@ class JsonlIngestorSpec extends SparkSpec {
 
   test("row-level quarantine: bad line diverted, its file's good lines land") {
     val r = JsonIngestor.ingestJsonlRowIsolated(spark, fixtureDir().toString)
-    try {
-      // no whole-file drops — every file contributes its good lines
-      assert(r.report.filesFailed == 0 && r.report.filesProcessed == 3)
-      assert(r.report.totalRecords == 7) // 2 + 3 + broken's 2 good lines
-      assert(r.data.filter(col("user") === "zed").count() == 2)
-      // exactly the one malformed line is quarantined, with lineage
-      val q = r.quarantine.collect()
-      assert(q.length == 1)
-      assert(q.head.getAs[String]("_source_file") == "broken.jsonl")
-      assert(q.head.getAs[String]("raw_line").startsWith("{bad line"))
-      assert(r.report.errors.map(_.file) == Seq("broken.jsonl"))
-      assert(r.report.errors.head.error == "1 quarantined line(s)")
-      // an all-clean directory quarantines nothing
-      val dir = tmpDir("jsonlq")
-      writeFile(dir, "a.jsonl", """{"k":1}""" + "\n")
-      val clean = JsonIngestor.ingestJsonlRowIsolated(spark, dir.toString)
-      try {
-        assert(clean.quarantine.count() == 0 && clean.report.totalRecords == 1)
-      } finally clean.release()
-    } finally r.release()
+    // no whole-file drops — every file contributes its good lines
+    assert(r.report.filesFailed == 0 && r.report.filesProcessed == 3)
+    assert(r.report.totalRecords == 7) // 2 + 3 + broken's 2 good lines
+    assert(r.data.filter(col("user") === "zed").count() == 2)
+    // exactly the one malformed line is quarantined, with lineage
+    val q = r.quarantine.collect()
+    assert(q.length == 1)
+    assert(q.head.getAs[String]("_source_file") == "broken.jsonl")
+    assert(q.head.getAs[String]("raw_line").startsWith("{bad line"))
+    assert(r.report.errors.map(_.file) == Seq("broken.jsonl"))
+    assert(r.report.errors.head.error == "1 quarantined line(s)")
+    // an all-clean directory quarantines nothing
+    val dir = tmpDir("jsonlq")
+    writeFile(dir, "a.jsonl", """{"k":1}""" + "\n")
+    val clean = JsonIngestor.ingestJsonlRowIsolated(spark, dir.toString)
+    assert(clean.quarantine.count() == 0 && clean.report.totalRecords == 1)
   }
 
   test("all-good and empty directories") {
