@@ -1,18 +1,18 @@
 package graft.ingest
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** The batch-tree lifecycle both persisted indexes share (Dedup's
   * near-dup index, VectorIndex's IVF-PQ index). Layout under a root:
   *  - `batches/b<N>/<table>` — one dir per save/append holding every
-  *    table in `tables`, sealed by `_COMMITTED` (readers ignore
-  *    markerless dirs; a retry always writes a FRESH dir) and hidden
-  *    again by `_RETIRED`; a vacuum's compaction is `batches_g<N>/b0`
-  *    once its generation marker commits ([[Generations]]);
-  *  - `forgotten/f<N>/ids` — marker-sealed tombstones (one `idCol`
+  *    table in `tables`, committed through FileUtils' sealed-dir
+  *    protocol (readers ignore unsealed dirs; a retry always writes a
+  *    FRESH dir) and hidden again by `_RETIRED`; a vacuum's compaction
+  *    is `batches_g<N>/b0` once its generation marker commits
+  *    ([[Generations]]);
+  *  - `forgotten/f<N>/ids` — sealed tombstones (one `idCol`
   *    column) every read filters out until a vacuum applies them;
   *  - `_SAVING`, `gen/`, `epoch/` — the exclusive lease of every
   *    destructive step, the generation markers, the save epoch.
@@ -21,16 +21,16 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 final case class BatchTree(idCol: String, tables: Seq[String]) {
 
-  /** Committed, unretired batch dirs of the LIVE generation (a staged
-    * vacuum tree without its gen marker is invisible here): a retired
-    * batch is out of every read the moment its marker lands, its bytes
-    * gone at the next [[vacuum]]. Fails when no batch is live.
+  /** Committed, unretired batch dirs of the LIVE generation, ascending
+    * by id (a staged vacuum tree without its gen marker is invisible
+    * here): a retired batch is out of every read the moment its marker
+    * lands, its bytes gone at the next [[vacuum]]. Fails when no batch
+    * is live.
     */
   def liveDirs(root: String, conf: Configuration): Seq[String] = {
     val base = Generations.currentBatchesDir(root, conf)
-    val dirs = FileUtils.listSubdirs(base, conf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", conf) &&
-        !FileUtils.exists(s"$d/_RETIRED", conf))
+    val dirs = FileUtils.sealedDirs(base, "b", conf)
+      .collect { case (_, d) if !FileUtils.exists(s"$d/_RETIRED", conf) => d }
     require(dirs.nonEmpty, s"no live committed index batches under $base")
     dirs
   }
@@ -55,14 +55,11 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
 
   /** One-shot commit for [[save]]'s `replace` (the lease holder has
     * nothing to race). The id is claimed atomically BEFORE `write`
-    * fills the dir ([[FileUtils.claimSeqDir]]), so two writers never
-    * interleave part files under one `_COMMITTED`.
+    * fills the dir ([[FileUtils.commitSeqDir]]), so two writers never
+    * interleave part files under one seal.
     */
-  def commitBatch(root: String, conf: Configuration)(write: String => Unit): Unit = {
-    val bdir = FileUtils.claimSeqDir(Generations.currentBatchesDir(root, conf), "b", conf)
-    write(bdir)
-    FileUtils.touch(s"$bdir/_COMMITTED", conf)
-  }
+  def commitBatch(root: String, conf: Configuration)(write: String => Unit): Unit =
+    FileUtils.commitSeqDir(Generations.currentBatchesDir(root, conf), "b", conf)(write): Unit
 
   /** Append one batch, SELF-HEALING against concurrent maintenance.
     * `attempt` is evaluated per attempt AFTER the save epoch is read:
@@ -93,7 +90,7 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
       // — marker first (one atomic op hides it), then the bytes
       if (!done) committed.foreach { case (_, _, bdir) =>
         try {
-          FileUtils.delete(s"$bdir/_COMMITTED", recursive = false, conf): Unit
+          FileUtils.unseal(bdir, conf)
           FileUtils.rmr(bdir, conf)
         } catch { case _: Exception => () }
       }
@@ -110,7 +107,7 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
   def retire(root: String, conf: Configuration, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     FileUtils.withSaveLease(root, conf) {
-      val retire = liveDirs(root, conf).sortBy(BatchTree.batchId).dropRight(keepLast)
+      val retire = liveDirs(root, conf).dropRight(keepLast)
       retire.foreach(d => FileUtils.touch(s"$d/_RETIRED", conf))
       retire.map(BatchTree.batchId)
     }
@@ -119,10 +116,9 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
   /** The committed tombstone ids, or None when nothing is forgotten. */
   def tombstones(s: SparkSession, root: String): Option[DataFrame] = {
     val conf = s.sparkContext.hadoopConfiguration
-    val dirs = FileUtils.listSubdirs(s"$root/forgotten", conf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", conf))
+    val dirs = FileUtils.sealedDirs(s"$root/forgotten", "f", conf)
     if (dirs.isEmpty) None
-    else Some(TinyParquet.readSpark(s, dirs.map(_ + "/ids"): _*)
+    else Some(TinyParquet.readSpark(s, dirs.map(_._2 + "/ids"): _*)
       .select(col(idCol).cast("bigint").as(idCol)))
   }
 
@@ -166,7 +162,7 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
         ids.select(col(srcCol).cast("bigint").as(idCol))
           .write.mode("overwrite").parquet(s"$d/ids"))
       Generations.awaitNoLease(root, conf)
-      fdir.exists(d => FileUtils.exists(s"$d/_COMMITTED", conf))
+      fdir.exists(FileUtils.isSealed(_, conf))
     }
   }
 
@@ -185,7 +181,7 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
       val compacted = read(s, root, dirs)
       val (gen, stage) = Generations.stageNextGen(root, conf)
       tables.zip(compacted).foreach { case (t, df) => df.write.parquet(s"$stage/b0/$t") }
-      FileUtils.touch(s"$stage/b0/_COMMITTED", conf)
+      FileUtils.seal(s"$stage/b0", conf)
       Generations.recordConsumed(root, gen, dirs, conf)
       require(Generations.commitGeneration(root, gen, conf),
         s"generation $gen of $root was committed concurrently — " +
@@ -210,28 +206,16 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
     }
   }
 
-  // Claim a `<prefix><N>` dir under `base`, fill it, seal it. Before the
-  // last attempt a failure is swallowed — a sweep can delete the tree
-  // under a mid-flight write, leaving an invisible markerless dir, and
-  // the caller goes around again; the last attempt's exception surfaces.
+  // Claim a `<prefix><N>` dir under `base`, fill it, seal it
+  // ([[FileUtils.commitSeqDir]], which unseals a failed commit so a
+  // retry can never double-commit). Before the last attempt a failure
+  // is swallowed — a sweep can delete the tree under a mid-flight
+  // write, leaving an invisible unsealed dir, and the caller goes
+  // around again; the last attempt's exception surfaces.
   private def commitAttempt(base: String, prefix: String, last: Boolean,
       conf: Configuration)(write: String => Unit): Option[String] =
-    try {
-      val d = FileUtils.claimSeqDir(base, prefix, conf)
-      try {
-        write(d)
-        FileUtils.touch(s"$d/_COMMITTED", conf)
-        Some(d)
-      } catch {
-        case _: Exception if !last =>
-          // the marker op itself may have half-landed before the
-          // failure — best-effort removal so a retry can never
-          // double-commit into a tree that is actually live
-          try FileUtils.delete(s"$d/_COMMITTED", recursive = false, conf): Unit
-          catch { case _: Exception => () }
-          None
-      }
-    } catch { case _: Exception if !last => None }
+    try Some(FileUtils.commitSeqDir(base, prefix, conf)(write))
+    catch { case _: Exception if !last => None }
 }
 
 object BatchTree {
@@ -239,6 +223,8 @@ object BatchTree {
   /** Attempts a self-healing append or forget makes before failing. */
   val MaxAttempts = 8
 
-  /** The numeric id of a `b<N>` batch dir (listings sort b10 < b2). */
-  def batchId(dir: String): Long = new Path(dir).getName.stripPrefix("b").toLong
+  /** The numeric id of a `b<N>` batch dir. */
+  def batchId(dir: String): Long =
+    FileUtils.seqId(dir, "b").getOrElse(
+      throw new IllegalArgumentException(s"not a b<N> batch dir: $dir"))
 }

@@ -168,31 +168,87 @@ object FileUtils {
     * visible to the next claimer — two appenders can never pick the
     * same id, the failure mode of a bare max(existing)+1 listing.
     * Claim files are never deleted (an abandoned claim's id is simply
-    * never reused — the same tolerance the _COMMITTED protocol gives
-    * abandoned dirs); a lifecycle reset (save/vacuum) clears them by
-    * removing `base` wholesale.
+    * never reused — the same tolerance the seal gives abandoned dirs,
+    * see [[commitSeqDir]]); a lifecycle reset (save/vacuum) clears them
+    * by removing `base` wholesale.
     */
   def claimSeqDir(base: String, prefix: String,
       conf: Configuration = new Configuration()): String = {
     mkdirs(base, conf)
     var attempt = 0
     while (attempt < 1000) {
-      val dirIds = listSubdirs(base, conf)
-        .map(new Path(_).getName)
-        .flatMap(n => n.stripPrefix(prefix).toLongOption.filter(_ => n.startsWith(prefix)))
-      val claimIds = listChildFiles(base, conf)
-        .map(new Path(_).getName)
-        .filter(n => n.startsWith(prefix) && n.endsWith(".claim"))
-        .flatMap(_.stripPrefix(prefix).stripSuffix(".claim").toLongOption)
-      val ids = dirIds ++ claimIds
+      val ids = seqDirs(base, prefix, conf).map(_._1) ++ claimIds(base, prefix, conf)
       val id = if (ids.isEmpty) 0L else ids.max + 1
-      if (createExclusive(s"$base/$prefix$id.claim", conf))
+      if (createExclusive(claimFile(base, prefix, id), conf))
         return s"$base/$prefix$id"
       attempt += 1
     }
     throw new java.io.IOException(
       s"could not claim a batch id under $base after 1000 attempts")
   }
+
+  // ---- the sealed-dir protocol -------------------------------------
+  // Every persisted lifecycle (index batch trees, warehouse versions and
+  // manifests, versioned compaction) commits alike: claim `<prefix><N>`
+  // ([[claimSeqDir]]), write the dir, seal it with `_COMMITTED`. Readers
+  // take sealed dirs only, newest by numeric id, so a crashed writer's
+  // unsealed dir is never resolved. Only this module spells the format.
+
+  private val SealMarker = "_COMMITTED"
+  private val ClaimSuffix = ".claim"
+
+  private def claimFile(base: String, prefix: String, id: Long) = s"$base/$prefix$id$ClaimSuffix"
+
+  /** The N of a `<prefix><N>` path or name; None for others (`bands`, `b_x`). */
+  def seqId(dir: String, prefix: String): Option[Long] = {
+    val name = dir.substring(dir.lastIndexOf('/') + 1)
+    if (name.startsWith(prefix)) name.substring(prefix.length).toLongOption else None
+  }
+
+  /** `<prefix><N>` child dirs of `base` as (N, path), ascending by N (b2 < b10); one listing. */
+  def seqDirs(base: String, prefix: String, conf: Configuration): Seq[(Long, String)] =
+    listSubdirs(base, conf).flatMap(d => seqId(d, prefix).map(_ -> d)).sortBy(_._1)
+
+  /** The ids of `<prefix><N>.claim` files under `base`, ascending, written dir or not. */
+  def claimIds(base: String, prefix: String, conf: Configuration): Seq[Long] =
+    listChildFiles(base, conf).filter(_.endsWith(ClaimSuffix))
+      .flatMap(f => seqId(f.stripSuffix(ClaimSuffix), prefix)).sorted
+
+  /** Drop a dead id's claim — lease holders only: a live claim is never reused. */
+  def unclaim(base: String, prefix: String, id: Long, conf: Configuration): Unit =
+    delete(claimFile(base, prefix, id), recursive = false, conf): Unit
+
+  def seal(dir: String, conf: Configuration): Unit = touch(s"$dir/$SealMarker", conf)
+
+  /** One atomic op hides `dir` from readers — always BEFORE its bytes go. */
+  def unseal(dir: String, conf: Configuration): Unit =
+    delete(s"$dir/$SealMarker", recursive = false, conf): Unit
+
+  def isSealed(dir: String, conf: Configuration): Boolean = exists(s"$dir/$SealMarker", conf)
+
+  /** Claim the next `<prefix><N>` under `base`, `write` it, seal it, return it.
+    * A failure leaves it unsealed: a half-landed seal is removed (best-effort)
+    * before the failure surfaces.
+    */
+  def commitSeqDir(base: String, prefix: String, conf: Configuration)(
+      write: String => Unit): String = {
+    val dir = claimSeqDir(base, prefix, conf)
+    try {
+      write(dir)
+      seal(dir, conf)
+      dir
+    } catch {
+      case e: Exception =>
+        try unseal(dir, conf) catch { case _: Exception => () }
+        throw e
+    }
+  }
+
+  /** Sealed `<prefix><N>` dirs under `base` as (N, path), ascending (newest
+    * is `.last`): one listing plus one seal check per numbered dir.
+    */
+  def sealedDirs(base: String, prefix: String, conf: Configuration): Seq[(Long, String)] =
+    seqDirs(base, prefix, conf).filter { case (_, d) => isSealed(d, conf) }
 
   /** Content md5 as lowercase hex (reference md5-hashes files <10MB;
     * streaming digest here has no size limit).

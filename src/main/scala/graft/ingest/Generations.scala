@@ -31,10 +31,7 @@ import org.apache.hadoop.fs.Path
 object Generations {
 
   private def genNumbers(root: String, conf: Configuration): Seq[Long] =
-    FileUtils.listChildFiles(s"$root/gen", conf)
-      .map(f => new Path(f).getName)
-      .filter(_.startsWith("g"))
-      .flatMap(_.stripPrefix("g").toLongOption)
+    FileUtils.listChildFiles(s"$root/gen", conf).flatMap(FileUtils.seqId(_, "g"))
 
   private def dirNameOf(n: Long): String =
     if (n == 0L) "batches" else s"batches_g$n"
@@ -126,10 +123,7 @@ object Generations {
     */
   def saveEpoch(root: String, conf: Configuration): Long =
     FileUtils.listChildFiles(s"$root/epoch", conf)
-      .map(f => new Path(f).getName)
-      .filter(_.startsWith("e"))
-      .flatMap(_.stripPrefix("e").toLongOption)
-      .maxOption.getOrElse(0L)
+      .flatMap(FileUtils.seqId(_, "e")).maxOption.getOrElse(0L)
 
   /** Advance the save epoch — callers hold the exclusive `_SAVING`
     * lease, so the atomic create can only lose to a lease violation;
@@ -149,11 +143,9 @@ object Generations {
     // Best-effort — a failed delete just leaves a marker for the next
     // save's prune.
     FileUtils.listChildFiles(s"$root/epoch", conf)
-      .map(f => new Path(f))
-      .filter(p => p.getName.startsWith("e") &&
-        p.getName.stripPrefix("e").toLongOption.exists(_ < n))
-      .foreach(p =>
-        try FileUtils.delete(p.toString, recursive = false, conf): Unit
+      .filter(FileUtils.seqId(_, "e").exists(_ < n))
+      .foreach(f =>
+        try FileUtils.delete(f, recursive = false, conf): Unit
         catch { case _: Exception => () })
   }
 
@@ -184,7 +176,7 @@ object Generations {
     */
   def verifyAppendCommit(root: String, epoch0: Long, base: String,
       bdir: String, what: String, conf: Configuration): Boolean =
-    (FileUtils.exists(s"$bdir/_COMMITTED", conf) &&
+    (FileUtils.isSealed(bdir, conf) &&
       currentBatchesDir(root, conf) == base &&
       saveEpoch(root, conf) == epoch0) ||
     (isConsumed(root, qualifiedName(bdir), conf) && {

@@ -236,17 +236,10 @@ object JsonIngestor {
     spark.read.json(elems)
   }
 
-  /** Exact-semantics ingestion (see object doc). `samplingRatio` < 1
-    * samples schema inference like the reference's 10-record sample
-    * (A13, application.py:209-214) — a speed/completeness dial for
-    * wide corpora (witnessed keys outside the sample are dropped,
-    * exactly the reference's documented caveat; only all-empty keys
-    * are ever restored as "", whatever the ratio).
-    */
+  /** Exact-semantics ingestion (see object doc). */
   def ingest(spark: SparkSession, dir: String,
       includePatterns: Seq[String] = Nil,
-      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns,
-      samplingRatio: Double = 1.0): IngestResult = {
+      excludePatterns: Seq[String] = FileScanner.DefaultIgnorePatterns): IngestResult = {
     val t0 = System.nanoTime()
     val files = jsonFiles(spark, dir, includePatterns, excludePatterns)
     val probes = probeFiles(spark, files)
@@ -262,7 +255,6 @@ object JsonIngestor {
             .option("multiLine", "true")
             .option("mode", "PERMISSIVE")
             .option("encoding", probe.encoding)
-            .option("samplingRatio", samplingRatio.toString)
             .option("columnNameOfCorruptRecord", CorruptCol)
             .json(probe.file)
         val clean =

@@ -52,6 +52,7 @@ object TabularIngestor {
     // per-file state)
     val groups = files.groupBy(f => delimiterFor(extOf(f)))
     val badFiles = scala.collection.mutable.SortedSet.empty[String]
+    var total = 0L
     val parts = groups.map { case (delim, fs) =>
       // pass 1 fixes the column set (all-string; TEXT contract anyway);
       // pass 2 re-reads with the corrupt-record column appended so
@@ -67,20 +68,22 @@ object TabularIngestor {
         .csv(fs: _*)
         .withColumn("_source_path", input_file_name())
       val dataCols = inferred.fieldNames
-      // per-file corrupt counts in one aggregation. Every data column is
+      // per-file corrupt and row counts in one aggregation — the only
+      // pass over the rows before the sink. Every data column is
       // referenced: CSV column pruning makes the parser only tokenize
       // required fields, which silently skips token-count validation —
       // a pruned scan would miss the very malformation being probed
       // (and Spark refuses a scan referencing only the corrupt column).
       // Columns are backtick-quoted (headers may contain dots) and the
-      // bad-count is read positionally (a data column could share any
+      // counts are read positionally (a data column could share any
       // alias we invent).
-      badFiles ++= raw.groupBy(col("_source_path"))
+      val (bad, good) = raw.groupBy(col("_source_path"))
         .agg(sum(when(col(CorruptCol).isNotNull, 1L).otherwise(0L)),
-          dataCols.map(c => count(Normalizer.qcol(c))).toSeq: _*)
+          count(lit(1)) +: dataCols.map(c => count(Normalizer.qcol(c))).toSeq: _*)
         .collect()
-        .filter(_.getLong(1) > 0) // index 1 = the corrupt-row count
-        .map(_.getString(0))
+        .partition(_.getLong(1) > 0) // index 1 = the corrupt-row count
+      badFiles ++= bad.map(_.getString(0))
+      total += good.map(_.getLong(2)).sum // index 2 = the file's row count
       val clean0 = raw.drop(CorruptCol)
       val clean =
         if (badFiles.isEmpty) clean0
@@ -91,7 +94,6 @@ object TabularIngestor {
     }.toSeq
     val data0 = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     val data = data0.select(data0.columns.sorted.map(Normalizer.qcol).toSeq: _*)
-    val total = data.count()
     val errors = badFiles.toSeq.map(f =>
       JsonIngestor.FileError(f, "malformed CSV record in file"))
     JsonIngestor.IngestResult(data, JsonIngestor.IngestReport(

@@ -1098,7 +1098,7 @@ object Dedup {
     // "invisible to every probe" (gov02) includes the probe side
     val Seq(bands, sh) = Tree.read(s, path, dirs)
     val Seq(newBands, newSh) =
-      Tree.read(s, path, Seq(dirs.maxBy(graft.ingest.BatchTree.batchId)))
+      Tree.read(s, path, Seq(dirs.last)) // liveDirs ascend by batch id
     probeCoreFromParts(bands, sh, newBands,
       newSh.select(col("doc_id"), col("shingles")), threshold, maxBucket)
   }

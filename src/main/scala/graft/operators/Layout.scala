@@ -251,10 +251,11 @@ object Layout {
     * per-file costs (task scheduling, footer reads, one LIST + GET per
     * object on S3), not bytes. Compaction rewrites the landing dir's
     * data as `ceil(totalBytes / targetBytes)` evenly-sized files into
-    * a claimed, marker-sealed VERSION dir under `dst` — the warehouse
-    * versioning idiom — so readers ([[readCompacted]]) always see a
-    * complete version (the latest committed), a crashed pass leaves
-    * the previous version live, and a concurrent pass fails loudly on
+    * a `v<N>` VERSION dir under `dst`, committed through FileUtils'
+    * sealed-dir protocol (claim, write, seal — the warehouse versioning
+    * idiom), so readers ([[readCompacted]]: the newest sealed version)
+    * always see a complete version, a crashed pass leaves the previous
+    * version live, and a concurrent pass fails loudly on
     * the `_SAVING` lease (the exclusion that also lets
     * [[vacuumCompacted]] reclaim abandoned versions safely).
     * The source dir is untouched: cutover (pointing the catalog at the
@@ -305,18 +306,18 @@ object Layout {
           s"targetBytes=$targetBytes) — exceeds Spark's Int partition " +
           "count; raise targetBytes")
       val nOut = nOutL.toInt
-      val vdir = graft.ingest.FileUtils.claimSeqDir(dst, "v", conf)
-      val data = s.read.parquet(src)
-      clusterBy.fold(data.repartition(nOut))(c =>
-          data.repartitionByRange(nOut, col(c)).sortWithinPartitions(c))
-        .write.parquet(s"$vdir/data")
-      // record the layout decision beside the data, BEFORE the seal: the
-      // state catalog (ops03) reports it from a 1-line read, and a
-      // future maintenance pass can tell a clustered version from a
-      // round-robin one without scanning a footer
-      clusterBy.foreach(c => graft.ingest.FileUtils.atomicWrite(
-        s"$vdir/cluster_by", c + "\n", conf))
-      graft.ingest.FileUtils.touch(s"$vdir/_COMMITTED", conf)
+      val vdir = graft.ingest.FileUtils.commitSeqDir(dst, "v", conf) { d =>
+        val data = s.read.parquet(src)
+        clusterBy.fold(data.repartition(nOut))(c =>
+            data.repartitionByRange(nOut, col(c)).sortWithinPartitions(c))
+          .write.parquet(s"$d/data")
+        // record the layout decision beside the data, BEFORE the seal:
+        // the state catalog (ops03) reports it from a 1-line read, and a
+        // future maintenance pass can tell a clustered version from a
+        // round-robin one without scanning a footer
+        clusterBy.foreach(c => graft.ingest.FileUtils.atomicWrite(
+          s"$d/cluster_by", c + "\n", conf))
+      }
       val after = graft.ingest.FileUtils.listDataFilesWithSize(s"$vdir/data", conf)
       CompactionStats(before.size.toLong, bytesBefore,
         after.size.toLong, after.map(_._2).sum)
@@ -338,11 +339,11 @@ object Layout {
     * abandoned uncommitted dirs, and stale claim files — holding the
     * lease proves no compactor is mid-write, so an unclaimed-looking
     * dir above the live id is a crashed pass, never an in-flight one.
-    * Per dead version the `_COMMITTED` marker goes FIRST (one atomic
-    * op takes the version out of every new reader's choice) and the
-    * bytes after — a vacuum killed anywhere leaves the live version
-    * serving (readers resolve the newest committed marker) and a
-    * re-run finishes the sweep. Claim-id reuse after a vacuum is
+    * Per dead version the seal goes FIRST (one atomic op takes the
+    * version out of every new reader's choice) and the bytes after —
+    * a vacuum killed anywhere leaves the live version serving
+    * (readers resolve the newest sealed version) and a re-run
+    * finishes the sweep. Claim-id reuse after a vacuum is
     * clean by the same lease argument: the dir a reused id would
     * collide with was deleted while provably no writer held it.
     * Metadata-only except the deletes: one LIST of the root, never a
@@ -351,36 +352,25 @@ object Layout {
   def vacuumCompacted(s: org.apache.spark.sql.SparkSession,
       dst: String): CompactionVacuumStats = {
     val conf = s.sparkContext.hadoopConfiguration
-    graft.ingest.FileUtils.withSaveLease(dst, conf) {
-      val versionOf: String => Option[Long] = n =>
-        if (n.startsWith("v")) n.stripPrefix("v").toLongOption else None
-      val dirs = graft.ingest.FileUtils.listSubdirs(dst, conf)
-        .flatMap(d => versionOf(new org.apache.hadoop.fs.Path(d).getName))
-      val committed = dirs.filter(v =>
-        graft.ingest.FileUtils.exists(s"$dst/v$v/_COMMITTED", conf))
+    import graft.ingest.FileUtils
+    FileUtils.withSaveLease(dst, conf) {
+      val dirs = FileUtils.seqDirs(dst, "v", conf)
+      val committed = dirs.filter { case (_, d) => FileUtils.isSealed(d, conf) }
       require(committed.nonEmpty,
         s"no committed compaction under $dst — nothing is safely " +
           "reclaimable without a live version to keep serving")
-      val live = committed.max
-      val dead = dirs.filterNot(_ == live)
+      val live = committed.last._1
+      val dead = dirs.filterNot(_._1 == live)
       var bytes = 0L
-      dead.foreach { v =>
-        bytes += graft.ingest.FileUtils
-          .listDataFilesWithSize(s"$dst/v$v/data", conf).map(_._2).sum
-        try graft.ingest.FileUtils.delete(
-          s"$dst/v$v/_COMMITTED", recursive = false, conf): Unit
-        catch { case _: Exception => () }
-        graft.ingest.FileUtils.rmr(s"$dst/v$v", conf)
+      dead.foreach { case (_, d) =>
+        bytes += FileUtils.listDataFilesWithSize(s"$d/data", conf).map(_._2).sum
+        try FileUtils.unseal(d, conf) catch { case _: Exception => () }
+        FileUtils.rmr(d, conf)
       }
       // stale claims of dead ids (id monotonicity survives: the live
       // dir keeps the max visible to claimSeqDir's enumeration)
-      graft.ingest.FileUtils.listChildFiles(dst, conf)
-        .map(f => new org.apache.hadoop.fs.Path(f).getName)
-        .filter(n => n.endsWith(".claim") &&
-          versionOf(n.stripSuffix(".claim")).exists(_ != live))
-        .foreach(n =>
-          try graft.ingest.FileUtils.delete(s"$dst/$n", recursive = false, conf): Unit
-          catch { case _: Exception => () })
+      FileUtils.claimIds(dst, "v", conf).filter(_ != live).foreach(v =>
+        try FileUtils.unclaim(dst, "v", v, conf) catch { case _: Exception => () })
       CompactionVacuumStats(live, dead.size.toLong, bytes)
     }
   }
@@ -389,12 +379,10 @@ object Layout {
     * mid-write version (the latestStates contract).
     */
   def readCompacted(s: org.apache.spark.sql.SparkSession, dst: String): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val vs = graft.ingest.FileUtils.listSubdirs(dst, conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    require(vs.nonEmpty, s"no committed compaction under $dst")
-    s.read.parquet(vs.maxBy(v => new org.apache.hadoop.fs.Path(v)
-      .getName.stripPrefix("v").toLong) + "/data")
+    val live = graft.ingest.FileUtils.sealedDirs(dst, "v",
+      s.sparkContext.hadoopConfiguration).lastOption
+    require(live.nonEmpty, s"no committed compaction under $dst")
+    s.read.parquet(live.get._2 + "/data")
   }
 
   // A 64-small-file landing of lineitem is compacted and read back

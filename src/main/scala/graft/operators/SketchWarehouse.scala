@@ -27,14 +27,16 @@ import graft.sources.Tables
   *    built with; erase/estimate read the STORED config (the
   *    saveNearDupIndex geometry contract).
   *  - `parts/p<v>/v<n>/...`   — partition v's state, one VERSION dir
-  *    per (re)build, sealed by `_COMMITTED`; readers take the highest
-  *    committed version, so a crashed rebuild leaves the previous
-  *    state live (never a half-written one) and versions are claimed
-  *    race-safely (FileUtils.claimSeqDir).
-  *  - `erased/e<n>/ids`       — marker-sealed erasure manifests. Every
+  *    per (re)build, committed through FileUtils' sealed-dir protocol
+  *    (claim, write, seal — `FileUtils.commitSeqDir`); readers take the
+  *    newest sealed version (`FileUtils.sealedDirs`), so a crashed
+  *    rebuild leaves the previous state live (never a half-written
+  *    one) and versions are claimed race-safely.
+  *  - `erased/e<n>/ids`       — sealed erasure manifests. Every
   *    rebuild excludes the UNION of all committed manifests, so
   *    repeated erasures touching the same partition compose instead of
   *    resurrecting earlier forgotten keys.
+  *  - `retired/r<n>/parts/<v>.txt` — sealed retirement manifests.
   *
   * Scale shape: state per partition is O(registers) / O(k) rows; an
   * erasure's cost is (affected partitions) × (one scan of those
@@ -163,7 +165,7 @@ object SketchWarehouse {
     // version dirs driver-side. The previous shape ran one filtered
     // scan + aggregation + write PER partition (8-12 Spark jobs per
     // save; guide §1.2 — one pass was always sufficient). The claimed
-    // v0-dir + _COMMITTED layout is byte-compatible: append/erase
+    // v0-dir + seal layout is byte-compatible: append/erase
     // rebuilds (partition-scoped by design) keep the per-partition
     // writePartState path.
     val tagged = fact.withColumn("_wh_p", col(partCol).cast("long"))
@@ -181,7 +183,7 @@ object SketchWarehouse {
       FileUtils.mkdirs(vdirs(p), hconf)
       require(FileUtils.move(s"$staging/_wh_p=$p", s"${vdirs(p)}/state", hconf),
         s"staging move failed for warehouse partition $p under $path")
-      FileUtils.touch(s"${vdirs(p)}/_COMMITTED", hconf)
+      FileUtils.seal(vdirs(p), hconf)
     }
     FileUtils.rmr(staging, hconf)
     // meta LAST, carrying the full partition list: it is the
@@ -229,22 +231,22 @@ object SketchWarehouse {
   private def writePartState(fact: DataFrame, path: String, kind: String,
       key: String, valCol: Option[String], partCol: String, p: Long,
       excludeErased: Option[SparkSession]): Unit = {
-    val hconf = conf(fact)
-    val vdir = FileUtils.claimSeqDir(s"$path/parts/p$p", "v", hconf)
-    // manifests read AFTER the claim (see scaladoc) — and always the
-    // FULL committed union, so repeated erasures compose
-    val erased = excludeErased.flatMap(s => erasedKeys(s, path))
-    val slice0 = fact.filter(col(partCol).cast("long") === p)
-    val slice = erased.fold(slice0)(e =>
-      slice0.join(e, slice0(key).cast("long") === e("k"), "left_anti"))
-    val state = kind match {
-      case "hll" => Sketches.hllRegisterUpdates(slice, key)
-      case "quantile" => Sketches.quantileSketch(slice, key, valCol.get)
-      case "cms" => Sketches.countMinCells(slice, key)
-      case other => sys.error(s"unknown warehouse kind in $path/meta: $other")
+    FileUtils.commitSeqDir(s"$path/parts/p$p", "v", conf(fact)) { vdir =>
+      // manifests read AFTER the claim (see scaladoc) — and always the
+      // FULL committed union, so repeated erasures compose
+      val erased = excludeErased.flatMap(s => erasedKeys(s, path))
+      val slice0 = fact.filter(col(partCol).cast("long") === p)
+      val slice = erased.fold(slice0)(e =>
+        slice0.join(e, slice0(key).cast("long") === e("k"), "left_anti"))
+      val state = kind match {
+        case "hll" => Sketches.hllRegisterUpdates(slice, key)
+        case "quantile" => Sketches.quantileSketch(slice, key, valCol.get)
+        case "cms" => Sketches.countMinCells(slice, key)
+        case other => sys.error(s"unknown warehouse kind in $path/meta: $other")
+      }
+      state.write.parquet(s"$vdir/state")
     }
-    state.write.parquet(s"$vdir/state")
-    FileUtils.touch(s"$vdir/_COMMITTED", hconf)
+    ()
   }
 
   /** Extend a saved warehouse with NEW partitions of `fact` — the
@@ -295,22 +297,20 @@ object SketchWarehouse {
 
   private def appendedParts(path: String,
       hconf: org.apache.hadoop.conf.Configuration): Seq[Long] =
-    FileUtils.listSubdirs(s"$path/parts", hconf)
-      .filter(d => FileUtils.exists(s"$d/_APPENDED", hconf))
-      .flatMap(d => new org.apache.hadoop.fs.Path(d)
-        .getName.stripPrefix("p").toLongOption)
+    FileUtils.seqDirs(s"$path/parts", "p", hconf)
+      .collect { case (p, d) if FileUtils.exists(s"$d/_APPENDED", hconf) => p }
 
   /** Committed retirement manifests' union — the partitions readers
     * must exclude. Kept as marker-sealed manifests (the erased/ idiom)
     * rather than a meta rewrite, so retirement needs no
     * read-modify-write of the warehouse-level commit marker and
     * concurrent retirers compose the same way concurrent erasers do.
+    * Listings only, so StateCatalog's census reads it too.
     */
-  private def retiredParts(path: String,
+  private[operators] def retiredParts(path: String,
       hconf: org.apache.hadoop.conf.Configuration): Set[Long] =
-    FileUtils.listSubdirs(s"$path/retired", hconf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", hconf))
-      .flatMap { d =>
+    FileUtils.sealedDirs(s"$path/retired", "r", hconf)
+      .flatMap { case (_, d) =>
         FileUtils.listChildFiles(s"$d/parts", hconf)
           .filter(_.endsWith(".txt"))
           .flatMap(f => new org.apache.hadoop.fs.Path(f)
@@ -332,42 +332,44 @@ object SketchWarehouse {
     * retired partition value skips it (the value stays "known"), so
     * late-arriving data for an expired window cannot resurrect it —
     * the contract a compliance window needs. Returns the newly
-    * retired values (empty = nothing stored was old enough).
+    * retired values (empty = nothing stored was old enough). Leased: a
+    * retire racing a save would retire the replacement's partitions.
     */
   def retireWarehousePartitions(s: SparkSession, path: String,
       cutoff: Long): Seq[Long] = {
     val hconf = s.sparkContext.hadoopConfiguration
-    val known = readMeta(hconf, path)._5 ++ appendedParts(path, hconf)
-    val already = retiredParts(path, hconf)
-    val fresh = known.distinct.filter(p => p < cutoff && !already(p))
-    if (fresh.nonEmpty) {
-      val rdir = FileUtils.claimSeqDir(s"$path/retired", "r", hconf)
+    FileUtils.withSaveLease(path, hconf) {
+      val known = readMeta(hconf, path)._5 ++ appendedParts(path, hconf)
+      val already = retiredParts(path, hconf)
+      val fresh = known.distinct.filter(p => p < cutoff && !already(p))
       // one empty FILE per value, named by the value: the manifest is
       // pure metadata, so it never needs a Spark job (or a parquet
       // footer) to write or read
-      fresh.foreach(p => FileUtils.touch(s"$rdir/parts/$p.txt", hconf))
-      FileUtils.touch(s"$rdir/_COMMITTED", hconf)
+      if (fresh.nonEmpty)
+        FileUtils.commitSeqDir(s"$path/retired", "r", hconf)(rdir =>
+          fresh.foreach(p => FileUtils.touch(s"$rdir/parts/$p.txt", hconf)))
+      fresh
     }
-    fresh
   }
 
   /** Physically delete every retired partition's state dirs. The
     * manifests stay (they are what keeps retirement durable against
     * late appends); only the bytes go. Safe to retry — deleting an
-    * already-gone dir is a no-op.
+    * already-gone dir is a no-op. Leased: a vacuum listing the manifests
+    * before a save would delete the replacement's fresh `parts/p<v>`.
     */
   def vacuumRetired(s: SparkSession, path: String): Unit = {
     val hconf = s.sparkContext.hadoopConfiguration
-    retiredParts(path, hconf)
-      .foreach(p => FileUtils.rmr(s"$path/parts/p$p", hconf))
+    FileUtils.withSaveLease(path, hconf)(
+      retiredParts(path, hconf)
+        .foreach(p => FileUtils.rmr(s"$path/parts/p$p", hconf)))
   }
 
   private def erasedKeys(s: SparkSession, path: String): Option[DataFrame] = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val dirs = FileUtils.listSubdirs(s"$path/erased", hconf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", hconf))
+    val dirs = FileUtils.sealedDirs(s"$path/erased", "e",
+      s.sparkContext.hadoopConfiguration)
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(_ + "/ids"): _*)
+    else Some(s.read.parquet(dirs.map(_._2 + "/ids"): _*)
       .select(col("k").cast("long").as("k")).distinct())
   }
 
@@ -389,12 +391,12 @@ object SketchWarehouse {
     // rebuilds leaves the request durable — RETRYING the erase is the
     // documented repair (it recomputes this manifest's partitions, and
     // every rebuild excludes the full committed union anyway)
-    val edir = FileUtils.claimSeqDir(s"$path/erased", "e", hconf)
-    val keyCol = eraseKeys.columns.head
-    val mine = eraseKeys.select(col(keyCol).cast("long").as("k")).distinct()
-      .localCheckpoint(eager = true) // pinned: reused for the affected scan
-    mine.write.parquet(s"$edir/ids")
-    FileUtils.touch(s"$edir/_COMMITTED", hconf)
+    // `mine` is pinned (reused for the affected scan); lazy, so its
+    // checkpoint runs inside the commit, after the manifest's claim
+    lazy val mine = eraseKeys.select(col(eraseKeys.columns.head).cast("long").as("k"))
+      .distinct().localCheckpoint(eager = true)
+    FileUtils.commitSeqDir(s"$path/erased", "e", hconf)(edir =>
+      mine.write.parquet(s"$edir/ids"))
     // affected partitions of THIS call's keys only — an erase costs
     // (partitions its keys live in) × (one slice rebuild), independent
     // of how many erasures the warehouse has absorbed before (the
@@ -432,13 +434,11 @@ object SketchWarehouse {
       s"warehouse at $path lists no live partitions (all saved " +
         "partitions may have been retired)")
     expected.map { p =>
-      val vs = FileUtils.listSubdirs(s"$path/parts/p$p", hconf)
-        .filter(v => FileUtils.exists(s"$v/_COMMITTED", hconf))
-      require(vs.nonEmpty,
+      val live = FileUtils.sealedDirs(s"$path/parts/p$p", "v", hconf).lastOption
+      require(live.nonEmpty,
         s"partition p$p of $path has no committed state — the " +
           "warehouse is damaged; re-run the save")
-      vs.maxBy(v => new org.apache.hadoop.fs.Path(v)
-        .getName.stripPrefix("v").toLong) + "/state"
+      live.get._2 + "/state"
     }
   }
 

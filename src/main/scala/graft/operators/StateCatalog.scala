@@ -13,17 +13,19 @@ import graft.sources.Tables
   * surface that tells an operator what a state directory IS and what
   * shape it is in, without touching any stored data.
   *
-  * Everything is derived from FileUtils listings of the lifecycle
-  * protocol's own markers (claim files, `_COMMITTED` / `_RETIRED` /
-  * `_APPENDED` seals, manifest dirs, the `_SAVING` lease) plus ONE
-  * bounded read of the 1-row `meta` manifest for the geometry string —
-  * never a batch/state/corpus file. Cost is a handful of LISTs however
+  * Everything is derived from listings: FileUtils' sealed-dir
+  * protocol reports the claim ids and the sealed `<prefix><N>` dirs
+  * (`seqDirs`, `claimIds`, `sealedDirs` — no name is parsed here),
+  * next to the `_RETIRED` / `_APPENDED` markers, manifest dirs and the
+  * `_SAVING` lease. Beyond that there is ONE bounded read of the 1-row
+  * `meta` manifest for the geometry string — never a
+  * batch/state/corpus file. Cost is a handful of LISTs however
   * large the state is, so it is safe to run against a 100-TB
   * deployment's indexes from a laptop.
   *
   * Point-in-time caveats (inherent to a metadata census): a batch an
   * appender is writing RIGHT NOW shows as a claimed-abandoned id until
-  * its `_COMMITTED` lands, and `stale_saving_lease` is really
+  * its seal lands, and `stale_saving_lease` is really
   * "a `_SAVING` lease exists" — the operator cross-checks against live
   * jobs before applying the lease error's named remedy.
   */
@@ -37,73 +39,15 @@ object StateCatalog {
 
   private def censusSeqDirs(base: String, prefix: String,
       conf: org.apache.hadoop.conf.Configuration): SeqCensus = {
-    val dirs = FileUtils.listSubdirs(base, conf)
-      .map(d => new org.apache.hadoop.fs.Path(d).getName -> d)
-      .filter(_._1.startsWith(prefix))
-    val committedNames = dirs.collect {
-      case (n, d) if FileUtils.exists(s"$d/_COMMITTED", conf) => n
-    }.toSet
-    val retired = dirs.count { case (n, d) =>
-      committedNames(n) && FileUtils.exists(s"$d/_RETIRED", conf)
-    }
-    // a claim whose target never reached _COMMITTED is abandoned (or
-    // mid-write — see the point-in-time caveat above); its id is
-    // burned by protocol, never reused
-    val abandoned = FileUtils.listChildFiles(base, conf)
-      .map(f => new org.apache.hadoop.fs.Path(f).getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".claim"))
-      .count(n => !committedNames(n.stripSuffix(".claim")))
-    SeqCensus(committedNames.size.toLong, retired.toLong, abandoned.toLong)
+    val committed = FileUtils.sealedDirs(base, prefix, conf)
+    val retired = committed.count { case (_, d) => FileUtils.exists(s"$d/_RETIRED", conf) }
+    // a claim whose dir was never sealed is abandoned (or mid-write —
+    // see the point-in-time caveat above); its id is burned by
+    // protocol, never reused
+    val committedIds = committed.map(_._1).toSet
+    val abandoned = FileUtils.claimIds(base, prefix, conf).count(!committedIds(_))
+    SeqCensus(committed.size.toLong, retired.toLong, abandoned.toLong)
   }
-
-  /** Warehouse partition-value census from listings only: retired
-    * values come from the retirement manifests' per-value marker files
-    * (pure metadata — the SketchWarehouse.retiredParts protocol).
-    */
-  private def warehouseRetiredParts(root: String,
-      conf: org.apache.hadoop.conf.Configuration): Set[Long] =
-    FileUtils.listSubdirs(s"$root/retired", conf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", conf))
-      .flatMap(d => FileUtils.listChildFiles(s"$d/parts", conf)
-        .filter(_.endsWith(".txt"))
-        .flatMap(f => new org.apache.hadoop.fs.Path(f)
-          .getName.stripSuffix(".txt").toLongOption))
-      .toSet
-
-  private def partDirs(root: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[(Long, String)] =
-    FileUtils.listSubdirs(s"$root/parts", conf)
-      .flatMap(d => new org.apache.hadoop.fs.Path(d)
-        .getName.stripPrefix("p").toLongOption.map(_ -> d))
-      .sortBy(_._1)
-
-  /** Whether `base` holds a claimSeqDir family for `prefix` — numbered
-    * dirs or their claim files; the structural signature of the
-    * compacted-table lifecycle's `v<N>` versions (claims land before
-    * any bytes, so even a just-claimed root is recognizable).
-    */
-  private def seqFamilyPresent(base: String, prefix: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    def numbered(n: String): Boolean =
-      n.startsWith(prefix) && n.stripPrefix(prefix).toLongOption.isDefined
-    FileUtils.listSubdirs(base, conf)
-      .exists(d => numbered(new org.apache.hadoop.fs.Path(d).getName)) ||
-    FileUtils.listChildFiles(base, conf)
-      .map(f => new org.apache.hadoop.fs.Path(f).getName)
-      .exists(n => n.endsWith(".claim") && numbered(n.stripSuffix(".claim")))
-  }
-
-  /** The compacted table's LIVE version dir (highest committed `v<N>`
-    * — exactly what Layout.readCompacted resolves), None before the
-    * first version commits.
-    */
-  private def liveVersionDir(root: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[(Long, String)] =
-    FileUtils.listSubdirs(root, conf)
-      .filter(d => FileUtils.exists(s"$d/_COMMITTED", conf))
-      .flatMap(d => new org.apache.hadoop.fs.Path(d)
-        .getName.stripPrefix("v").toLongOption.map(_ -> d))
-      .sortBy(_._1).lastOption
 
   /** The 1-row meta manifest rendered as a stable `k=v,...` string —
     * the single read beyond listings (geometry is index identity, and
@@ -115,7 +59,8 @@ object StateCatalog {
       kind: String): String = {
     if (kind == "compacted_table") {
       val conf = s.sparkContext.hadoopConfiguration
-      return liveVersionDir(root, conf)
+      // the LIVE version: the newest sealed v<N>, which readCompacted reads
+      return FileUtils.sealedDirs(root, "v", conf).lastOption
         .flatMap { case (_, d) =>
           graft.ingest.HadoopFsConditionalStore.get(s"$d/cluster_by", conf) }
         .map(b => "cluster_by=" + new String(b,
@@ -177,14 +122,17 @@ object StateCatalog {
       else if (FileUtils.exists(s"$root/parts", conf)) "sketch_warehouse"
       else if (FileUtils.exists(s"$root/batches", conf) ||
         FileUtils.exists(s"$root/meta", conf)) "near_dup_index"
-      else if (seqFamilyPresent(root, "v", conf)) "compacted_table"
+      // root-level `v<N>` dirs or claims (claims land before any bytes,
+      // so even a just-claimed root is recognizable)
+      else if (FileUtils.seqDirs(root, "v", conf).nonEmpty ||
+        FileUtils.claimIds(root, "v", conf).nonEmpty) "compacted_table"
       else sys.error(s"$root holds no recognizable engine state " +
         "(vector index: centroids/; sketch warehouse: parts/; " +
         "near-dup index: batches/ + meta/; compacted table: v<N>/)")
     val (batches, parts) =
       if (kind == "sketch_warehouse") {
-        val retiredVals = warehouseRetiredParts(root, conf)
-        val pds = partDirs(root, conf)
+        val retiredVals = SketchWarehouse.retiredParts(root, conf)
+        val pds = FileUtils.seqDirs(s"$root/parts", "p", conf)
         val versions = pds.map { case (_, d) => censusSeqDirs(d, "v", conf) }
         (SeqCensus(versions.map(_.committed).sum, 0L,
           versions.map(_.abandoned).sum),
@@ -201,7 +149,7 @@ object StateCatalog {
     val generation =
       if (kind == "sketch_warehouse") 0L
       else if (kind == "compacted_table")
-        liveVersionDir(root, conf).map(_._1).getOrElse(-1L)
+        FileUtils.sealedDirs(root, "v", conf).lastOption.fold(-1L)(_._1)
       else graft.ingest.Generations.currentGen(root, conf)
     val tombstones =
       if (kind == "sketch_warehouse" || kind == "compacted_table") 0L
@@ -239,15 +187,11 @@ object StateCatalog {
     val conf = s.sparkContext.hadoopConfiguration
     require(FileUtils.exists(s"$root/parts", conf),
       s"$root is not a sketch warehouse (no parts/)")
-    val retiredVals = warehouseRetiredParts(root, conf)
+    val retiredVals = SketchWarehouse.retiredParts(root, conf)
     import s.implicits._
-    partDirs(root, conf).map { case (p, d) =>
-      val committed = FileUtils.listSubdirs(d, conf)
-        .filter(v => FileUtils.exists(s"$v/_COMMITTED", conf))
-        .flatMap(v => new org.apache.hadoop.fs.Path(v)
-          .getName.stripPrefix("v").toLongOption)
-      (p, committed.size.toLong,
-        if (committed.isEmpty) -1L else committed.max,
+    FileUtils.seqDirs(s"$root/parts", "p", conf).map { case (p, d) =>
+      val committed = FileUtils.sealedDirs(d, "v", conf)
+      (p, committed.size.toLong, committed.lastOption.fold(-1L)(_._1),
         FileUtils.exists(s"$d/_APPENDED", conf), retiredVals(p))
     }.toDF("partition", "n_versions", "live_version", "appended",
       "retired").orderBy("partition")
@@ -274,24 +218,15 @@ object StateCatalog {
       else sys.error(s"$root is not a persisted index root " +
         "(vector index: centroids/; near-dup index: batches/ + meta/)")
     val base = graft.ingest.Generations.currentBatchesDir(root, conf)
-    val dirs = FileUtils.listSubdirs(base, conf)
-      .flatMap { d =>
-        val n = new org.apache.hadoop.fs.Path(d).getName
-        if (n.startsWith("b")) n.stripPrefix("b").toLongOption.map(_ -> d)
-        else None
-      }.toMap
-    val claimIds = FileUtils.listChildFiles(base, conf)
-      .map(f => new org.apache.hadoop.fs.Path(f).getName)
-      .filter(n => n.startsWith("b") && n.endsWith(".claim"))
-      .flatMap(_.stripPrefix("b").stripSuffix(".claim").toLongOption)
+    val dirs = FileUtils.seqDirs(base, "b", conf).toMap
     import s.implicits._
-    (dirs.keySet ++ claimIds).toSeq.sorted.map { id =>
+    (dirs.keySet ++ FileUtils.claimIds(base, "b", conf)).toSeq.sorted.map { id =>
       dirs.get(id) match {
         case Some(d) =>
           val tables = FileUtils.listSubdirs(d, conf)
             .map(t => new org.apache.hadoop.fs.Path(t).getName).sorted
           (kind, id,
-            FileUtils.exists(s"$d/_COMMITTED", conf),
+            FileUtils.isSealed(d, conf),
             FileUtils.exists(s"$d/_RETIRED", conf),
             tables.mkString(","),
             tables.exists(t =>

@@ -146,6 +146,36 @@ class SketchWarehouseSpec extends SparkSpec {
     } finally Seq(path, fresh).foreach(FileUtils.rmr(_, conf))
   }
 
+  test("retire and vacuumRetired refuse a held save lease and touch nothing") {
+    val path = tmpDir("wh_hll_lease").toString
+    try {
+      SketchWarehouse.saveHllWarehouse(orders, path, "o_custkey", "part")
+      FileUtils.touch(s"$path/_SAVING", conf)
+      val e = intercept[IllegalArgumentException](
+        SketchWarehouse.retireWarehousePartitions(spark, path, 2L))
+      assert(e.getMessage.contains("delete the lease"),
+        s"error must name the lease remedy: ${e.getMessage}")
+      assert(!FileUtils.exists(s"$path/retired", conf),
+        "a refused retire must not claim or write a manifest")
+      assert(FileUtils.exists(s"$path/_SAVING", conf),
+        "a refused retire must leave the holder's lease alone")
+      FileUtils.delete(s"$path/_SAVING", recursive = false, conf)
+      // lease free: the same call retires and releases the lease it took
+      assert(SketchWarehouse.retireWarehousePartitions(spark, path, 2L).sorted ==
+        Seq(0L, 1L))
+      assert(!FileUtils.exists(s"$path/_SAVING", conf))
+      FileUtils.touch(s"$path/_SAVING", conf)
+      intercept[IllegalArgumentException](SketchWarehouse.vacuumRetired(spark, path))
+      Seq(0L, 1L).foreach(p =>
+        assert(FileUtils.exists(s"$path/parts/p$p", conf),
+          s"a refused vacuum deleted retired partition p$p"))
+      FileUtils.delete(s"$path/_SAVING", recursive = false, conf)
+      SketchWarehouse.vacuumRetired(spark, path)
+      assert(!FileUtils.exists(s"$path/parts/p0", conf))
+      assert(!FileUtils.exists(s"$path/_SAVING", conf))
+    } finally FileUtils.rmr(path, conf)
+  }
+
   test("CONCURRENT erasers on a shared partition: neither request is lost") {
     import spark.implicits._
     val path = tmpDir("wh_hll_race").toString
