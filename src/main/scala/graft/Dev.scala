@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
   * {{{
   * runMain graft.Dev time    <name> [name ...]         # 3 timed passes
   * runMain graft.Dev profile <name> [name ...] | all   # wall, jobs, in-job time, gap
-  * runMain graft.Dev jobs    <name> [name ...]         # each job's id, time, call site
+  * runMain graft.Dev jobs    <name> [name ...]         # each job's id, time, scopes, call site
   * runMain graft.Dev explain <outDir> <tag> <name> [name ...] | all
   * }}}
   *
@@ -26,17 +26,26 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
   * `profile` and `jobs` are two views of one [[JobLog]]: profile's gap
   * is wall minus the UNION of the job spans, i.e. driver, file-system
   * and planning time between jobs ("many small jobs" vs "slow jobs");
-  * `jobs` says which jobs, from where, and in which SQL execution.
+  * `jobs` says which jobs, from where, in which SQL execution, and
+  * which plan nodes built their RDDs.
   */
 object Dev {
   /** `execution` is the job's `spark.sql.execution.id`, "-" outside one:
     * broadcast and subquery jobs share a call site, not an execution.
+    * `scopes` are the RDD operation scopes of the stage the job ends
+    * in, i.e. the plan nodes (`Exchange`, `BroadcastExchange`,
+    * `Scan parquet`, `WholeStageCodegen (n)`) that built its RDDs: they
+    * tell those jobs apart. Earlier stages, often already computed by
+    * another job and skipped, are named in `site`.
     */
-  final case class Job(id: Int, start: Long, end: Long, site: String, execution: String)
+  final case class Job(id: Int, start: Long, end: Long, site: String, execution: String,
+      scopes: Seq[String]) {
+    def label: String = scopes.mkString("{", ", ", "} ") + site
+  }
 
-  /** Records each job's id, span (listener-event epoch ms), site and execution. */
+  /** Records each job's id, span (listener-event epoch ms), site, execution and scopes. */
   final class JobLog extends SparkListener {
-    private val starts = new ConcurrentHashMap[Integer, (Long, String, String)]()
+    private val starts = new ConcurrentHashMap[Integer, (Long, String, String, Seq[String])]()
     private val done = new ConcurrentLinkedQueue[Job]()
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       // the result stage's name carries the action call site; the
@@ -47,11 +56,11 @@ object Dev {
         infos.dropRight(1).map(_.name).distinct.mkString(" <= [", " | ", "]")
       val execution = Option(js.properties)
         .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).getOrElse("-")
-      starts.put(js.jobId, (js.time, site, execution)); ()
+      starts.put(js.jobId, (js.time, site, execution, infos.lastOption.map(Bus.scopes).getOrElse(Nil))); ()
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = {
       val v = starts.remove(Integer.valueOf(je.jobId))
-      if (v != null) done.add(Job(je.jobId, v._1, je.time, v._2, v._3)): Unit
+      if (v != null) done.add(Job(je.jobId, v._1, je.time, v._2, v._3, v._4)): Unit
     }
 
     /** Runs `body`; returns its wall span (epoch ms) and the jobs that
@@ -107,15 +116,15 @@ object Dev {
         val (t0, t1, js) = measured(name)
         println(f"[jobs] $name wall=${(t1 - t0) / 1e3}%.2f n=${js.size}")
         js.foreach(j => println(
-          f"[jobs]   #${j.id}%-4d exec=${j.execution}%-5s ${(j.end - j.start) / 1e3}%6.3f  ${j.site}"))
-        println(s"[jobs] $name by execution and site:")
-        js.groupBy(j => (j.execution, j.site)).toSeq
-          .map { case ((exec, site), g) =>
-            (exec, site, g.size, g.map(j => j.end - j.start).sum / 1e3)
+          f"[jobs]   #${j.id}%-4d exec=${j.execution}%-5s ${(j.end - j.start) / 1e3}%6.3f  ${j.label}"))
+        println(s"[jobs] $name by execution, scopes and site:")
+        js.groupBy(j => (j.execution, j.label)).toSeq
+          .map { case ((exec, label), g) =>
+            (exec, label, g.size, g.map(j => j.end - j.start).sum / 1e3)
           }
           .sortBy(-_._4)
-          .foreach { case (exec, site, n, sum) =>
-            println(f"[jobs]   exec=$exec%-5s n=$n%-3d sum=$sum%6.3f  $site")
+          .foreach { case (exec, label, n, sum) =>
+            println(f"[jobs]   exec=$exec%-5s n=$n%-3d sum=$sum%6.3f  $label")
           }
       case _ =>
         try {

@@ -17,6 +17,9 @@ import org.apache.spark.sql.SparkSession
   *  - nanosecond parquet timestamps surfaced as longs (the events table;
   *    see [[graft.sources.Tables]]);
   *  - graft's SQL functions injected through [[GraftExtensions]];
+  *  - the `file:` scheme bound to [[graft.ingest.LocalFs]], which sets
+  *    and reads permissions through java.nio instead of starting a
+  *    `chmod` or `ls` process per file;
   *  - state-store maintenance effectively disabled: this engine drains
   *    BOUNDED stream replays (parity queries, tests, bench passes),
   *    where background snapshot compaction buys nothing — but the
@@ -38,6 +41,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.ingest.LocalFs].getName)
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .config("spark.ui.enabled", "false")
 

@@ -127,7 +127,10 @@ object FileScanner {
   }
 
   def matchesAny(name: String, patterns: Seq[String]): Boolean =
-    patterns.exists(p => globToRegex(p).matcher(name).matches())
+    matches(name, patterns.map(globToRegex))
+
+  private def matches(name: String, patterns: Seq[Pattern]): Boolean =
+    patterns.exists(_.matcher(name).matches())
 
   def shouldIgnore(name: String, ignore: Seq[String] = DefaultIgnorePatterns): Boolean =
     matchesAny(name, ignore)
@@ -137,7 +140,8 @@ object FileScanner {
     def all: Seq[String] = byFormat.values.flatten.toSeq.sorted
   }
 
-  /** Walk `dir`, classify by extension, apply ignore/include patterns.
+  /** Walk `dir`, classify by extension, apply ignore/include patterns
+    * (each compiled once per call, not once per file).
     * Mirrors `FileScanner.discover_files` (file_scanner.py:80-143).
     */
   def discover(
@@ -151,13 +155,14 @@ object FileScanner {
     val root = new Path(dir)
     val fs = root.getFileSystem(hadoopConf)
     val found = ArrayBuffer.empty[(String, String)] // (format, path)
+    val exclude = excludePatterns.map(globToRegex)
+    val include = includePatterns.map(globToRegex)
     if (fs.exists(root)) {
       val it: RemoteIterator[LocatedFileStatus] = fs.listFiles(root, recursive)
       while (it.hasNext) {
         val st = it.next()
         val name = st.getPath.getName
-        if (!shouldIgnore(name, excludePatterns) &&
-            (includePatterns.isEmpty || matchesAny(name, includePatterns))) {
+        if (!matches(name, exclude) && (include.isEmpty || matches(name, include))) {
           classify(name).filter(fileTypes.contains).foreach { fmt =>
             found += fmt -> st.getPath.toString
           }

@@ -1,12 +1,12 @@
 package graft.ingest
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -120,7 +120,7 @@ object JsonIngestor {
   private def jsonFiles(spark: SparkSession, dir: String, includePatterns: Seq[String],
       excludePatterns: Seq[String]): Seq[String] =
     FileScanner.discover(dir, Seq("json"), recursive = true, includePatterns,
-      excludePatterns, spark.sparkContext.hadoopConfiguration)("json")
+      excludePatterns, spark.sessionState.newHadoopConf())("json")
 
   private def emptyReport(t0: Long): IngestReport =
     IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9)
@@ -173,15 +173,18 @@ object JsonIngestor {
     * read dispatch below inherently needs that much) — never the full
     * key union per file, which at millions of wide files was the one
     * manifest structure scaling as schema width × file count.
+    * The tasks open files with the session's Hadoop conf, so its
+    * `spark.hadoop.*` settings (credentials, schemes) reach them.
     */
   def probeFiles(spark: SparkSession, files: Seq[String]): Seq[FileProbe] = {
     if (files.isEmpty) return Nil
     val n = math.min(files.size, spark.sparkContext.defaultParallelism)
+    val sessionConf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     spark.sparkContext
       .parallelize(files, n)
       .mapPartitions { it =>
         val mapper = new ObjectMapper()
-        val conf = new Configuration()
+        val conf = sessionConf.value
         val codecs =
           new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
         it.map { f =>

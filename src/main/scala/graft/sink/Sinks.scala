@@ -1,16 +1,20 @@
 package graft.sink
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Table sinks (reference A14-A15: idempotent DDL + batched insert,
   * sqlite_connector.py:131-222).
   *
   * The reference's SQLite sink becomes three Spark-native options:
-  *  - [[saveTable]]: managed table via `saveAsTable` (append = the
-  *    reference's insert-into-existing semantics; DDL-if-absent is
-  *    implicit). Parquet under the hood — the 100 TB path, partitioned
-  *    by any caller-supplied columns.
+  *  - [[saveTable]]: managed table (append = the reference's
+  *    insert-into-existing semantics; DDL-if-absent is implicit).
+  *    Parquet under the hood — the 100 TB path, partitioned by any
+  *    caller-supplied columns.
   *  - [[saveParquet]]: plain parquet directory sink.
   *  - [[saveJdbc]]: JDBC batch insert, `batchsize` mirroring the
   *    reference's executemany batch_size=1000. Per-partition
@@ -23,14 +27,62 @@ object Sinks {
   /** Returns the row count written (the reference's insert_data return,
     * A19 metrics). The count rides the write via `observe()` — ONE pass
     * over the data, not a count scan plus a write scan.
+    *
+    * Creating a table, and `Overwrite`, go through `saveAsTable`. An
+    * `Append` to an existing parquet table of the session catalog goes
+    * through `insertInto`, with the batch's columns selected by name in
+    * the table's order from the catalog entry (which lists no files).
+    * `saveAsTable`'s append runs as a create-table-as-select
+    * (`DataSource.writeAndRead`): it lists the whole table directory at
+    * analysis, again when the write refreshes its file index and again
+    * when `writeAndRead` resolves the relation, then drops the cached
+    * relation. `insertInto` reuses the cached relation and lists the
+    * table once, when it refreshes that relation after the write — so a
+    * batch's commit no longer grows with the table. The append keeps
+    * `saveAsTable`'s checks: the batch must carry exactly the table's
+    * columns (in any order), and `partitionBy` must be the table's
+    * partitioning (none for an unpartitioned table).
     */
   def saveTable(df: DataFrame, table: String,
       partitionBy: Seq[String] = Nil, mode: SaveMode = SaveMode.Append): Long = {
     val obs = Observation()
     val observed = df.observe(obs, count(lit(1)).as("n"))
-    val w = observed.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
+    (if (mode == SaveMode.Append) appendTarget(df.sparkSession, table) else None) match {
+      case Some(meta) => appendByName(observed, table, meta, partitionBy)
+      case None =>
+        val w = observed.write.mode(mode)
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
+    }
     obs.get("n").asInstanceOf[Long]
+  }
+
+  /** `table`'s catalog entry if it is a table of the session catalog
+    * (not a temp view) in the default format; any other target keeps
+    * `saveAsTable` and its errors.
+    */
+  private def appendTarget(spark: SparkSession, table: String): Option[CatalogTable] = {
+    val catalog = spark.sessionState.catalog
+    val parts = spark.sessionState.sqlParser.parseMultipartIdentifier(table)
+    val ident = TableIdentifier(parts.last, parts.init.lastOption)
+    if (parts.size > 2 || catalog.isTempView(parts) || !catalog.tableExists(ident)) None
+    else Some(catalog.getTableMetadata(ident))
+      .filter(_.provider.exists(_.equalsIgnoreCase(spark.sessionState.conf.defaultDataSourceName)))
+  }
+
+  private def appendByName(df: DataFrame, table: String, meta: CatalogTable,
+      partitionBy: Seq[String]): Unit = {
+    val key: String => String =
+      if (df.sparkSession.sessionState.conf.caseSensitiveAnalysis) identity
+      else _.toLowerCase(Locale.ROOT)
+    val cols = meta.schema.fieldNames.toSeq
+    require(df.columns.map(key).sorted.sameElements(cols.map(key).sorted),
+      s"cannot append to $table: the batch's columns (${df.columns.mkString(", ")})" +
+        s" are not the table's (${cols.mkString(", ")})")
+    require(partitionBy.map(key) == meta.partitionColumnNames.map(key),
+      s"cannot append to $table: partitionBy (${partitionBy.mkString(", ")}) is not" +
+        s" the table's partitioning (${meta.partitionColumnNames.mkString(", ")})")
+    df.select(cols.map(c => col(s"`${c.replace("`", "``")}`")): _*)
+      .write.mode(SaveMode.Append).insertInto(table)
   }
 
   def saveParquet(df: DataFrame, path: String,
@@ -87,7 +139,7 @@ object Sinks {
     */
   def upsertTable(spark: SparkSession, table: String, incoming: DataFrame,
       keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, row_number}
+    import org.apache.spark.sql.functions.row_number
     require(keys.nonEmpty, "upsert needs at least one key column")
     val nonKey = incoming.columns.filterNot(keys.contains).toSeq
     val w = org.apache.spark.sql.expressions.Window
@@ -114,7 +166,7 @@ object Sinks {
     */
   def mergeAggregates(spark: SparkSession, table: String, batch: DataFrame,
       keys: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.sum
     require(keys.nonEmpty, "merge needs at least one key column")
     if (!tableExists(spark, table)) { saveTable(batch, table, mode = SaveMode.Overwrite); () }
     else {

@@ -65,6 +65,10 @@ class DevSpec extends SparkSpec {
       assert(started.size == 1, s"executions $started")
       assert(jobs.size >= 2, s"jobs $jobs")
       assert(jobs.map(_.execution).toSet == started)
+      // each job names the exchange it builds or reads, where the call
+      // sites all say CompletableFuture
+      assert(jobs.forall(_.scopes.exists(_.endsWith("Exchange"))), jobs.map(_.scopes))
+      assert(jobs.exists(_.scopes.contains("BroadcastExchange")), jobs.map(_.scopes))
       // a job outside any SQL execution carries none
       val (_, _, plain) = log.record(spark.sparkContext) {
         spark.sparkContext.parallelize(1 to 3).count(): Unit

@@ -231,4 +231,33 @@ class IngestorSpec extends SparkSpec {
         s"all-empty keys must be restored as empty string: $r")
     }
   }
+
+  test("exact mode discovers and probes files with the session's Hadoop conf") {
+    val dir = tmpDir("session-scheme")
+    writeFile(dir, "a.json", """[{"k": "x"}, {"k": "y"}]""")
+    writeFile(dir, "b.json", """{"k": "z"}""")
+    // a scheme only this session's conf knows: discovery, the probe
+    // tasks and Spark's reader must all resolve it. Uncached, as in an
+    // executor JVM that has not met the scheme yet: each open resolves
+    // it from the conf it is handed, not from a filesystem another
+    // caller already built.
+    val s = spark.newSession()
+    s.conf.set("fs.graftsession.impl", classOf[SessionSchemeFs].getName)
+    s.conf.set("fs.graftsession.impl.disable.cache", "true")
+    val r = JsonIngestor.ingest(s, s"graftsession://$dir")
+    assert(r.report.errors.isEmpty, r.report.errors)
+    assert(r.report.filesProcessed == 2 && r.report.totalRecords == 3)
+    assert(r.data.select("k").collect().map(_.getString(0)).sorted.toSeq == Seq("x", "y", "z"))
+  }
+}
+
+/** Local files under the `graftsession:` scheme. Listings carry no
+  * POSIX permissions, as an object store's do (Hadoop's local statuses
+  * read theirs through a `file:` URI).
+  */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(st =>
+    new FileStatus(st.getLen, st.isDirectory, 1, st.getBlockSize, st.getModificationTime, st.getPath))
 }

@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class SinksSpec extends SparkSpec {
 
   test("co-bucketed tables join without a shuffle exchange") {
@@ -131,5 +133,63 @@ class SinksSpec extends SparkSpec {
     assert(deFilesAfter == deFilesBefore, "untouched partition files must survive")
     // the session flag is restored (no leak into later static writes)
     assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode").contains("dynamic"))
+  }
+
+  test("an append lands by name, returns its count and is visible without a refresh") {
+    import spark.implicits._
+    val t = "sinks_append_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    assert(Sinks.saveTable(Seq((1L, "a", 1.5)).toDF("id", "v", "x"), t) == 1)
+    assert(spark.table(t).count() == 1) // resolves, and caches, the relation
+    val commands = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        commands.add(qe.analyzed.toString): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n =
+      try Sinks.saveTable(Seq((2.5, "b", 2L), (3.5, "c", 3L)).toDF("x", "V", "id"), t)
+      finally {
+        org.apache.spark.graft.Bus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(n == 2)
+    val rows = spark.table(t).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+    assert(rows == Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5)))
+    // an insert into the existing relation, not a create-table-as-select
+    val run = commands.asScala.mkString("\n")
+    assert(run.contains("InsertIntoHadoopFsRelationCommand") &&
+      !run.contains("CreateDataSourceTableAsSelectCommand"), run)
+  }
+
+  test("an append fails on an extra or a missing column, and lands nothing") {
+    import spark.implicits._
+    val t = "sinks_append_cols_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Sinks.saveTable(Seq((1L, "a")).toDF("id", "v"), t)
+    val extra = intercept[IllegalArgumentException](
+      Sinks.saveTable(Seq((2L, "b", 0)).toDF("id", "v", "w"), t))
+    assert(extra.getMessage.contains("columns"), extra.getMessage)
+    intercept[IllegalArgumentException](Sinks.saveTable(Seq(3L).toDF("id"), t))
+    intercept[IllegalArgumentException](Sinks.saveTable(Seq((4L, "d")).toDF("id", "w"), t))
+    assert(spark.table(t).count() == 1)
+  }
+
+  test("an append to a partitioned table must name the table's partitioning") {
+    import spark.implicits._
+    val t = "sinks_append_part_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Sinks.saveTable(Seq((1L, "a", "p")).toDF("id", "v", "k"), t, Seq("k"))
+    // same partitioning, columns in another order: lands in its partition
+    assert(Sinks.saveTable(Seq(("q", 2L, "b")).toDF("k", "id", "v"), t, Seq("k")) == 1)
+    assert(spark.table(t).filter(col("k") === "q").select("id").as[Long].collect().toSeq == Seq(2L))
+    val other = intercept[IllegalArgumentException](
+      Sinks.saveTable(Seq((3L, "c", "q")).toDF("id", "v", "k"), t, Seq("v")))
+    assert(other.getMessage.contains("partition"), other.getMessage)
+    // as with saveAsTable, no partitionBy is not the table's partitioning
+    intercept[IllegalArgumentException](Sinks.saveTable(Seq((4L, "d", "q")).toDF("id", "v", "k"), t))
+    assert(spark.table(t).count() == 2)
   }
 }
