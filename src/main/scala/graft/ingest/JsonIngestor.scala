@@ -3,7 +3,7 @@ package graft.ingest
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -99,11 +99,6 @@ object JsonIngestor {
 
   private[ingest] val CorruptCol = "_graft_corrupt"
 
-  /** `_source_file` lineage: the last segment of the `_source_path`
-    * column (`input_file_name()`).
-    */
-  private def sourceFile: Column = substring_index(col("_source_path"), "/", -1)
-
   /** Line-format dispatch on the DECOMPRESSED name: `batch.jsonl.gz`
     * is a jsonl file Spark's reader decompresses natively by extension.
     */
@@ -124,11 +119,6 @@ object JsonIngestor {
 
   private def emptyReport(t0: Long): IngestReport =
     IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9)
-
-  /** Normalizes a read with `_source_path` lineage (§1.2) and tags `_source_file`. */
-  private def land(read: DataFrame): DataFrame =
-    Normalizer.normalizeAll(read.withColumn("_source_file", sourceFile).drop("_source_path"),
-      passthrough = Set("_source_file"))
 
   /** A value subtree carries a TYPE WITNESS if it contains any
     * non-null scalar. Spark's full-ratio JSON inference keeps exactly
@@ -345,7 +335,8 @@ object JsonIngestor {
       else {
         val read = spark.read.schema(dataSchema).option("multiLine", wholeFile).json(files: _*)
           .withColumn("_source_path", input_file_name())
-        land(if (badFiles.isEmpty) read else read.filter(!col("_source_path").isin(badFiles.toSeq: _*)))
+        Normalizer.land(
+          if (badFiles.isEmpty) read else read.filter(!col("_source_path").isin(badFiles.toSeq: _*)))
       }
     IngestResult(data, IngestReport(filesDiscovered = files.size,
       filesProcessed = files.size - badFiles.size, filesFailed = badFiles.size, totalRecords = total,
@@ -404,13 +395,13 @@ object JsonIngestor {
         // the data-column conjunct is always true; it keeps a data column
         // in the scan when the caller's action needs none (a count)
         val keep = Normalizer.qcol(dataCols.head)
-        land(if (!hasCorrupt) read
+        Normalizer.land(if (!hasCorrupt) read
           else read.filter(col(CorruptCol).isNull && (keep.isNull || keep.isNotNull)).drop(CorruptCol))
       }
     val quarantine =
       if (!hasCorrupt) emptyQuarantine
       else JsonlCensus.rejectedLines(spark, files, CorruptCol)
-        .select(sourceFile.as("_source_file"), col("raw_line"))
+        .select(Normalizer.sourceFile(col("_source_path")).as("_source_file"), col("raw_line"))
     RowIsolatedResult(data, quarantine, IngestReport(filesDiscovered = files.size,
       filesProcessed = files.size, filesFailed = 0, totalRecords = total, errors = errors,
       elapsedSec = (System.nanoTime() - t0) / 1e9))

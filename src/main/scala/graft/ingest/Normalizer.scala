@@ -56,4 +56,16 @@ object Normalizer {
     }
     df.select(cols.toSeq: _*)
   }
+
+  /** `_source_file` lineage: the last segment of a file path
+    * (`input_file_name()`).
+    */
+  def sourceFile(path: Column): Column = substring_index(path, "/", -1)
+
+  /** Normalizes a read with `_source_path` lineage (§1.2) and tags
+    * `_source_file`; columns emerge sorted, as from [[normalizeAll]].
+    */
+  def land(read: DataFrame): DataFrame =
+    normalizeAll(read.withColumn("_source_file", sourceFile(col("_source_path")))
+      .drop("_source_path"), passthrough = Set("_source_file"))
 }

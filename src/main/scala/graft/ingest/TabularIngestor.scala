@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object TabularIngestor {
 
-  private def basenameCol = element_at(split(input_file_name(), "/"), -1)
-
   private def delimiterFor(ext: String): String = ext match {
     case "tsv" => "\t"
     case "psv" => "|"
@@ -44,7 +42,7 @@ object TabularIngestor {
       header: Boolean = true): JsonIngestor.IngestResult = {
     val t0 = System.nanoTime()
     val files = FileScanner.discover(dir, Seq("csv"), recursive = true,
-      includePatterns, excludePatterns, spark.sparkContext.hadoopConfiguration)("csv")
+      includePatterns, excludePatterns, spark.sessionState.newHadoopConf())("csv")
     if (files.isEmpty)
       return JsonIngestor.IngestResult(spark.emptyDataFrame,
         JsonIngestor.IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9))
@@ -88,9 +86,7 @@ object TabularIngestor {
       val clean =
         if (badFiles.isEmpty) clean0
         else clean0.filter(!col("_source_path").isin(badFiles.toSeq: _*))
-      Normalizer.normalizeAll(
-        clean.withColumn("_source_file", basenameCol).drop("_source_path"),
-        passthrough = Set("_source_file"))
+      Normalizer.land(clean)
     }.toSeq
     val data0 = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     val data = data0.select(data0.columns.sorted.map(Normalizer.qcol).toSeq: _*)
@@ -107,12 +103,12 @@ object TabularIngestor {
       normalizeText: Boolean = false): JsonIngestor.IngestResult = {
     val t0 = System.nanoTime()
     val files = FileScanner.discover(dir, Seq("parquet"), recursive = true,
-      includePatterns, excludePatterns, spark.sparkContext.hadoopConfiguration)("parquet")
+      includePatterns, excludePatterns, spark.sessionState.newHadoopConf())("parquet")
     if (files.isEmpty)
       return JsonIngestor.IngestResult(spark.emptyDataFrame,
         JsonIngestor.IngestReport(0, 0, 0, 0L, Nil, (System.nanoTime() - t0) / 1e9))
     val raw = spark.read.option("mergeSchema", "true").parquet(files: _*)
-      .withColumn("_source_file", basenameCol)
+      .withColumn("_source_file", Normalizer.sourceFile(input_file_name()))
     // parquet is already typed: TEXT normalization only on request
     // (fidelity mode); default keeps native types for query performance
     val df = if (normalizeText) Normalizer.normalizeAll(raw, passthrough = Set("_source_file"))

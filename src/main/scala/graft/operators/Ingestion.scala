@@ -497,7 +497,7 @@ object Ingestion {
     val manifest = table + "_manifest"
     val all = graft.ingest.FileScanner.discover(landingDir, Seq("json"),
       recursive = true, Nil, graft.ingest.FileScanner.DefaultIgnorePatterns,
-      s.sparkContext.hadoopConfiguration)("json")
+      s.sessionState.newHadoopConf())("json")
       .filter(f => f.endsWith(".jsonl") || f.endsWith(".ndjson"))
     // skip decision is an ANTI-JOIN against the manifest table, never a
     // manifest collect: across many resumes the manifest accumulates

@@ -1,7 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import scala.collection.concurrent.TrieMap
 
@@ -10,18 +9,22 @@ import scala.collection.concurrent.TrieMap
   * by a normalized type string, clear unsupported-type error listing
   * the registry, extension by registering a new connector class).
   *
-  * Spark-first re-expression: a connector wraps a DataFrame write plus
+  * Spark-first re-expression: a connector pairs a [[Sinks]] write with
   * the matching read-back, so "switch the sink" is a config string, not
   * a code change — the registry ships `table` (managed catalog table),
   * `parquet` (directory), `bucketed` (co-bucketed managed table for
   * shuffle-free downstream joins) and `jdbc` (batched inserts, the
   * reference's executemany shape). `register` adds custom backends at
   * runtime, exactly the factory's documented extension point.
+  *
+  * The built-in connectors only parse their params, when created; each
+  * write is one call into [[Sinks]], which issues it, counts its rows
+  * and refuses `SaveMode.Ignore` (a skipped write has no row count).
   */
 trait Connector {
   /** Write `df` to `target`; returns rows written (reference
-    * insert_data return, A19 metrics). Implementations count via
-    * `observe()` — one pass, no extra count scan.
+    * insert_data return, A19 metrics). The built-in connectors count
+    * through [[Sinks]] — one pass, no extra count scan.
     */
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Long
 
@@ -38,40 +41,24 @@ object Connectors {
 
   private val registry = TrieMap.empty[String, Params => Connector]
 
-  private def observedWrite(df: DataFrame, mode: SaveMode)(run: DataFrame => Unit): Long = {
-    // SaveMode.Ignore can silently skip the write when the target
-    // exists; no action would ever fill the observation and get()
-    // would block forever. Callers should check existence explicitly
-    // (tableExists / read) and pick Append or Overwrite.
-    require(mode != SaveMode.Ignore,
-      "SaveMode.Ignore is not supported by connectors (a skipped write has no row count); " +
-        "check target existence explicitly and use Append or Overwrite")
-    val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
-    run(observed)
-    obs.get("n").asInstanceOf[Long]
-  }
+  private def partitionCols(params: Params): Seq[String] =
+    params.get("partitionBy").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
 
-  /** Managed catalog table (`saveAsTable`); optional `partitionBy`
-    * comma-list in params.
+  /** Managed catalog table through [[Sinks.saveTable]] (an append to an
+    * existing table inserts by name); optional `partitionBy` comma-list
+    * in params.
     */
   private def tableConnector(params: Params): Connector = new Connector {
-    private val parts = params.get("partitionBy").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    private val parts = partitionCols(params)
     def write(df: DataFrame, target: String, mode: SaveMode): Long =
-      observedWrite(df, mode) { d =>
-        val w = d.write.mode(mode)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).saveAsTable(target)
-      }
+      Sinks.saveTable(df, target, parts, mode)
     def read(spark: SparkSession, target: String): DataFrame = spark.table(target)
   }
 
   private def parquetConnector(params: Params): Connector = new Connector {
-    private val parts = params.get("partitionBy").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    private val parts = partitionCols(params)
     def write(df: DataFrame, target: String, mode: SaveMode): Long =
-      observedWrite(df, mode) { d =>
-        val w = d.write.mode(mode)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(target)
-      }
+      Sinks.counted(df, mode)(Sinks.saveParquet(_, target, parts, mode))
     def read(spark: SparkSession, target: String): DataFrame = spark.read.parquet(target)
   }
 
@@ -84,21 +71,20 @@ object Connectors {
     private val numBuckets = params.getOrElse("numBuckets",
       throw new ConnectorError("bucketed connector needs 'numBuckets'")).toInt
     def write(df: DataFrame, target: String, mode: SaveMode): Long =
-      observedWrite(df, mode)(d =>
-        Sinks.saveBucketedTable(d, target, bucketCols, numBuckets, mode = mode))
+      Sinks.counted(df, mode)(
+        Sinks.saveBucketedTable(_, target, bucketCols, numBuckets, mode = mode))
     def read(spark: SparkSession, target: String): DataFrame = spark.table(target)
   }
 
-  /** JDBC batched insert; `url` required, `batchsize` mirrors the
-    * reference's executemany batch_size=1000.
+  /** JDBC batched insert; `url` required, `batchsize` (an integer)
+    * mirrors the reference's executemany batch_size=1000.
     */
   private def jdbcConnector(params: Params): Connector = new Connector {
     private val url = params.getOrElse("url",
       throw new ConnectorError("jdbc connector needs 'url'"))
-    private val batch = params.getOrElse("batchsize", "1000")
+    private val batch = params.getOrElse("batchsize", "1000").toInt
     def write(df: DataFrame, target: String, mode: SaveMode): Long =
-      observedWrite(df, mode)(_.write.mode(mode).format("jdbc")
-        .option("url", url).option("dbtable", target).option("batchsize", batch).save())
+      Sinks.counted(df, mode)(Sinks.saveJdbc(_, url, target, batch, mode))
     def read(spark: SparkSession, target: String): DataFrame =
       spark.read.format("jdbc").option("url", url).option("dbtable", target).load()
   }

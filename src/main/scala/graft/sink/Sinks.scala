@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Table sinks (reference A14-A15: idempotent DDL + batched insert,
-  * sqlite_connector.py:131-222).
+  * sqlite_connector.py:131-222), and the one place a sink write is
+  * issued: [[Connectors]] only parses its params and calls in here.
   *
   * The reference's SQLite sink becomes three Spark-native options:
   *  - [[saveTable]]: managed table (append = the reference's
@@ -21,12 +22,29 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *    transactions (weaker than the reference's single global
   *    commit+rollback — documented; stage to a temp table for exactly-
   *    once).
+  *
+  * A counted write — [[saveTable]], or a connector's write through
+  * [[counted]] — returns the rows written (insert_data's return, A19
+  * metrics) via `observe()`: ONE pass over the data, not a count scan
+  * plus a write scan. [[counted]] holds the one `SaveMode.Ignore` guard.
   */
 object Sinks {
 
-  /** Returns the row count written (the reference's insert_data return,
-    * A19 metrics). The count rides the write via `observe()` — ONE pass
-    * over the data, not a count scan plus a write scan.
+  /** Runs `write` over `df` with its row count observed and returns the
+    * count. Refuses `SaveMode.Ignore`: a write it skips never fills the
+    * observation, and `get` would block forever — check the target's
+    * existence and pick `Append` or `Overwrite`.
+    */
+  private[sink] def counted(df: DataFrame, mode: SaveMode)(write: DataFrame => Unit): Long = {
+    require(mode != SaveMode.Ignore,
+      "SaveMode.Ignore is not supported by counted writes (a skipped write has no row count); " +
+        "check target existence explicitly and use Append or Overwrite")
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** Returns the row count written, counted by [[counted]].
     *
     * Creating a table, and `Overwrite`, go through `saveAsTable`. An
     * `Append` to an existing parquet table of the session catalog goes
@@ -44,17 +62,15 @@ object Sinks {
     * partitioning (none for an unpartitioned table).
     */
   def saveTable(df: DataFrame, table: String,
-      partitionBy: Seq[String] = Nil, mode: SaveMode = SaveMode.Append): Long = {
-    val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
-    (if (mode == SaveMode.Append) appendTarget(df.sparkSession, table) else None) match {
-      case Some(meta) => appendByName(observed, table, meta, partitionBy)
-      case None =>
-        val w = observed.write.mode(mode)
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
+      partitionBy: Seq[String] = Nil, mode: SaveMode = SaveMode.Append): Long =
+    counted(df, mode) { observed =>
+      (if (mode == SaveMode.Append) appendTarget(df.sparkSession, table) else None) match {
+        case Some(meta) => appendByName(observed, table, meta, partitionBy)
+        case None =>
+          val w = observed.write.mode(mode)
+          (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).saveAsTable(table)
+      }
     }
-    obs.get("n").asInstanceOf[Long]
-  }
 
   /** `table`'s catalog entry if it is a table of the session catalog
     * (not a temp view) in the default format; any other target keeps
@@ -95,18 +111,15 @@ object Sinks {
     * present in `df`, leaving every other partition untouched — the
     * restatement primitive of a partitioned warehouse (static
     * Overwrite would drop ALL partitions first; Append would
-    * duplicate). The session flag is set for this write only and
-    * restored after, so other writers keep the session default.
+    * duplicate). The mode is this write's option, which takes
+    * precedence over the session's `partitionOverwriteMode`; the
+    * session setting, and so every other writer, is left as it is.
     */
   def overwritePartitionsDynamic(df: DataFrame, path: String,
       partitionBy: Seq[String]): Unit = {
     require(partitionBy.nonEmpty, "dynamic overwrite needs partition columns")
-    val s = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path)
-    finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionBy: _*).parquet(path)
   }
 
   def saveJdbc(df: DataFrame, url: String, table: String,
@@ -205,7 +218,7 @@ object Sinks {
     */
   def parquetPartFiles(spark: SparkSession, path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("."))

@@ -330,8 +330,9 @@ object EventStreams {
 
   /** Stream into any registered [[graft.sink.Connectors]] connector via
     * `foreachBatch` — the streaming half of the pluggable-sink story:
-    * each micro-batch lands through the same connector code path batch
-    * ingestion uses (so a "switch the sink" config change covers both).
+    * each micro-batch lands through the connector's one call into
+    * [[graft.sink.Sinks]], the write path batch ingestion uses (so a
+    * "switch the sink" config change covers both).
     * Appends with per-batch atomicity; exactly-once needs an
     * idempotent/transactional target (parquet append here is
     * at-least-once on retry, as with any non-transactional foreachBatch

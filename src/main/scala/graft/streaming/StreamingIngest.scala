@@ -43,12 +43,8 @@ object StreamingIngest {
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(dir)
-      .withColumn("_source_file", element_at(split(input_file_name(), "/"), -1))
-    val normalized =
-      Normalizer.normalizeAll(raw, passthrough = Set("_source_file"))
-    val sorted = normalized
-      .select(normalized.columns.sorted.map(Normalizer.qcol).toSeq: _*)
-    sorted.writeStream
+      .withColumn("_source_path", input_file_name())
+    Normalizer.land(raw).writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], _: Long) =>

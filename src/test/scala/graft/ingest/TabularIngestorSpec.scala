@@ -59,4 +59,34 @@ class TabularIngestorSpec extends SparkSpec {
     assert(r.data.schema("k").dataType.typeName == "long")
     assert(r.data.columns.contains("_source_file"))
   }
+
+  /** A session whose conf alone knows the `graftsession:` scheme,
+    * uncached as in an executor JVM that has not met it yet (see
+    * IngestorSpec's exact-mode test).
+    */
+  private def schemeSession() = {
+    val s = spark.newSession()
+    s.conf.set("fs.graftsession.impl", classOf[SessionSchemeFs].getName)
+    s.conf.set("fs.graftsession.impl.disable.cache", "true")
+    s
+  }
+
+  test("csv discovery lists with the session's Hadoop conf") {
+    val dir = tmpDir("csv-session-scheme")
+    writeFile(dir, "a.csv", "id,name\n1,Ann\n2,Bob")
+    writeFile(dir, "b.tsv", "id\tcity\n3\tParis")
+    val r = TabularIngestor.ingestCsv(schemeSession(), s"graftsession://$dir")
+    assert(r.report.filesDiscovered == 2 && r.report.totalRecords == 3)
+    assert(r.data.select("_source_file").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("a.csv", "a.csv", "b.tsv"))
+  }
+
+  test("parquet discovery lists with the session's Hadoop conf") {
+    val dir = tmpDir("pq-session-scheme")
+    import spark.implicits._
+    Seq((1L, "x"), (2L, "y")).toDF("k", "v").write.parquet(dir.resolve("t.parquet").toString)
+    val r = TabularIngestor.ingestParquet(schemeSession(), s"graftsession://$dir")
+    assert(r.report.totalRecords == 2)
+    assert(r.data.select("k").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+  }
 }

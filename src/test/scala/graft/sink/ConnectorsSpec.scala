@@ -3,6 +3,8 @@ package graft.sink
 import graft.SparkSpec
 import org.apache.spark.sql.SaveMode
 
+import scala.jdk.CollectionConverters._
+
 class ConnectorsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -57,5 +59,38 @@ class ConnectorsSpec extends SparkSpec {
     assert(c.write(sample, "conn_j1", SaveMode.Overwrite) == 3L)
     val back = c.read(spark, "conn_j1").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(back == Set((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
+  test("table connector appends by name through the existing table's relation") {
+    val c = Connectors.create("table")
+    spark.sql("DROP TABLE IF EXISTS conn_t2")
+    assert(c.write(sample, "conn_t2") == 3L)
+    assert(c.read(spark, "conn_t2").count() == 3L)
+    val commands = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        commands.add(qe.analyzed.toString): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n =
+      try c.write(Seq(("d", 4L), ("e", 5L)).toDF("v", "k"), "conn_t2")
+      finally {
+        org.apache.spark.graft.Bus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(n == 2L)
+    val rows = c.read(spark, "conn_t2").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")))
+    val run = commands.asScala.mkString("\n")
+    assert(run.contains("InsertIntoHadoopFsRelationCommand") &&
+      !run.contains("CreateDataSourceTableAsSelectCommand"), run)
+  }
+
+  test("jdbc connector rejects a non-integer batchsize when created") {
+    val e = intercept[ConnectorError](
+      Connectors.create("jdbc", Map("url" -> "jdbc:derby:memory:unused", "batchsize" -> "lots")))
+    assert(e.getMessage.contains("jdbc"), e.getMessage)
   }
 }

@@ -192,4 +192,43 @@ class SinksSpec extends SparkSpec {
     intercept[IllegalArgumentException](Sinks.saveTable(Seq((4L, "d", "q")).toDF("id", "v", "k"), t))
     assert(spark.table(t).count() == 2)
   }
+
+  test("saveTable refuses SaveMode.Ignore instead of waiting on a count that never comes") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val t = "sinks_ignore_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Sinks.saveTable(Seq((1L, "a")).toDF("id", "v"), t)
+    // a skipped write would block the count forever: bound the wait
+    val run = Future(Sinks.saveTable(Seq((2L, "b")).toDF("id", "v"), t,
+      mode = org.apache.spark.sql.SaveMode.Ignore))(scala.concurrent.ExecutionContext.global)
+    val e = intercept[IllegalArgumentException](Await.result(run, 60.seconds))
+    assert(e.getMessage.contains("Ignore"), e.getMessage)
+    assert(spark.table(t).count() == 1)
+  }
+
+  test("overwritePartitionsDynamic leaves the session's partitionOverwriteMode alone") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val out = tmpDir("dyn-session").resolve("t").toString
+    Seq((1L, "en"), (2L, "de")).toDF("id", "lang").write.partitionBy("lang").parquet(out)
+    // a job's properties carry the session's SQL settings as they were
+    // when it started: what any other writer on the session saw then
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(js.properties.getProperty(key))): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Sinks.overwritePartitionsDynamic(Seq((9L, "en")).toDF("id", "lang"), out, Seq("lang"))
+    finally {
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(!seen.isEmpty)
+    assert(seen.asScala.forall(_ != "dynamic"), seen)
+    // the write option alone made the overwrite dynamic: de survives
+    assert(spark.read.parquet(out).select("id").as[Long].collect().sorted.toSeq == Seq(2L, 9L))
+  }
 }
