@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *  - `_SAVING`, `gen/`, `epoch/` — the exclusive lease of every
   *    destructive step, the generation markers, the save epoch.
   * An index keeps only its manifests (geometry, quantizers) and how
-  * one batch's tables are written.
+  * one batch's tables are written. Every step resolves the root with
+  * the `conf` its caller passes: the session's Hadoop conf
+  * (`sessionState.newHadoopConf()`), built once per public index call,
+  * so a scheme or credential set with `spark.conf.set` reaches it.
   */
 final case class BatchTree(idCol: String, tables: Seq[String]) {
 
@@ -114,38 +117,39 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
   }
 
   /** The committed tombstone ids, or None when nothing is forgotten. */
-  def tombstones(s: SparkSession, root: String): Option[DataFrame] = {
-    val conf = s.sparkContext.hadoopConfiguration
+  def tombstones(s: SparkSession, root: String, conf: Configuration): Option[DataFrame] = {
     val dirs = FileUtils.sealedDirs(s"$root/forgotten", "f", conf)
     if (dirs.isEmpty) None
-    else Some(TinyParquet.readSpark(s, dirs.map(_._2 + "/ids"): _*)
+    else Some(TinyParquet.readSpark(s, conf, dirs.map(_._2 + "/ids"): _*)
       .select(col(idCol).cast("bigint").as(idCol)))
   }
 
   /** Each of `tables` unioned over `dirs`, tombstoned rows removed —
     * in `tables` order.
     */
-  def read(s: SparkSession, root: String, dirs: Seq[String]): Seq[DataFrame] = {
-    val tomb = tombstones(s, root)
+  def read(s: SparkSession, root: String, dirs: Seq[String],
+      conf: Configuration): Seq[DataFrame] = {
+    val tomb = tombstones(s, root, conf)
     tables.map { t =>
-      val df = TinyParquet.readSpark(s, dirs.map(d => s"$d/$t"): _*)
+      val df = TinyParquet.readSpark(s, conf, dirs.map(d => s"$d/$t"): _*)
       tomb.fold(df)(df.join(_, Seq(idCol), "left_anti"))
     }
   }
 
   /** [[read]] over the live batches. */
-  def read(s: SparkSession, root: String): Seq[DataFrame] =
-    read(s, root, liveDirs(root, s.sparkContext.hadoopConfiguration))
+  def read(s: SparkSession, root: String, conf: Configuration): Seq[DataFrame] =
+    read(s, root, liveDirs(root, conf), conf)
 
   /** One table of the live batches tagged with a `batch_id` column,
     * tombstoned rows removed — the per-batch audits' input.
     */
-  def readByBatch(s: SparkSession, root: String, table: String): DataFrame = {
-    val stored = liveDirs(root, s.sparkContext.hadoopConfiguration)
-      .map(d => TinyParquet.readSpark(s, s"$d/$table")
+  def readByBatch(s: SparkSession, root: String, table: String,
+      conf: Configuration): DataFrame = {
+    val stored = liveDirs(root, conf)
+      .map(d => TinyParquet.readSpark(s, conf, s"$d/$table")
         .withColumn("batch_id", lit(BatchTree.batchId(d))))
       .reduce(_.unionByName(_))
-    tombstones(s, root).fold(stored)(stored.join(_, Seq(idCol), "left_anti"))
+    tombstones(s, root, conf).fold(stored)(stored.join(_, Seq(idCol), "left_anti"))
   }
 
   /** Record `ids`' `srcCol` as a marker-sealed tombstone entry,
@@ -155,8 +159,7 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
     * writer and re-record if the entry is gone (idempotent) — a
     * governance request is never silently dropped.
     */
-  def forget(root: String, ids: DataFrame, srcCol: String): Unit = {
-    val conf = ids.sparkSession.sparkContext.hadoopConfiguration
+  def forget(root: String, conf: Configuration, ids: DataFrame, srcCol: String): Unit =
     untilDurable("forget on", root) { last =>
       val fdir = commitAttempt(s"$root/forgotten", "f", last, conf)(d =>
         ids.select(col(srcCol).cast("bigint").as(idCol))
@@ -164,23 +167,24 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
       Generations.awaitNoLease(root, conf)
       fdir.exists(FileUtils.isSealed(_, conf))
     }
-  }
 
   /** PHYSICAL erasure and compaction under the `_SAVING` lease: the
     * live batches minus tombstoned rows are STAGED as the next
-    * generation's `b0` (invisible to readers), the consumed batch list
-    * is recorded (so a racing [[append]] can tell "folded into b0" from
+    * generation's `b0` (invisible to readers; its tables are written
+    * concurrently, [[BatchTree.concurrently]], and a failed write leaves
+    * it unsealed), the consumed batch list is recorded (so a racing [[append]] can tell "folded into b0" from
     * "died with the old tree"), and one atomic marker create flips the
     * generation live; a crash either side leaves one whole generation
     * serving. Manifests are untouched.
     */
-  def vacuum(s: SparkSession, root: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
+  def vacuum(s: SparkSession, root: String, conf: Configuration): Unit =
     FileUtils.withSaveLease(root, conf) {
       val dirs = liveDirs(root, conf)
-      val compacted = read(s, root, dirs)
+      val compacted = read(s, root, dirs, conf)
       val (gen, stage) = Generations.stageNextGen(root, conf)
-      tables.zip(compacted).foreach { case (t, df) => df.write.parquet(s"$stage/b0/$t") }
+      BatchTree.concurrently(tables.zip(compacted).map { case (t, df) =>
+        () => df.write.parquet(s"$stage/b0/$t")
+      }: _*)
       FileUtils.seal(s"$stage/b0", conf)
       Generations.recordConsumed(root, gen, dirs, conf)
       require(Generations.commitGeneration(root, gen, conf),
@@ -191,7 +195,6 @@ final case class BatchTree(idCol: String, tables: Seq[String]) {
       Generations.sweepStale(root, conf)
       FileUtils.rmr(s"$root/forgotten", conf)
     }
-  }
 
   // The self-healing writes' retry bound: `attempt(last)` reports
   // whether its commit is durable.
@@ -222,6 +225,22 @@ object BatchTree {
 
   /** Attempts a self-healing append or forget makes before failing. */
   val MaxAttempts = 8
+
+  /** Runs independent table writes as CONCURRENT Spark jobs: the
+    * scheduler interleaves their tasks, so a batch pays one write tail
+    * instead of one per table. Every write is awaited, even after one
+    * failed, so none is still in flight when the caller reacts; the
+    * first failure then rethrows, before the caller seals anything.
+    */
+  def concurrently(writes: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    writes.map(w => Future(w()))
+      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      .foreach(_.get)
+  }
 
   /** The numeric id of a `b<N>` batch dir. */
   def batchId(dir: String): Long =

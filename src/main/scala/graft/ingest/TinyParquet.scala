@@ -147,8 +147,8 @@ object TinyParquet {
     * Spark job `spark.read.parquet` schedules to read that one footer.
     * `None` when no path holds a data file.
     */
-  private[ingest] def sparkSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
-    val conf = s.sparkContext.hadoopConfiguration
+  private[ingest] def sparkSchema(s: SparkSession, conf: Configuration,
+      paths: Seq[String]): Option[StructType] =
     paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
@@ -159,15 +159,16 @@ object TinyParquet {
         new ParquetToSparkSchemaConverter(s.sessionState.conf))
       finally r.close()
     }
-  }
 
   /** `spark.read.parquet(paths)` for engine-written state, with the
     * schema taken from [[sparkSchema]] instead of an inference job.
     * Paths without a data file fall through to Spark's own read (and
-    * its error for a missing or empty table).
+    * its error for a missing or empty table). `conf` resolves the
+    * footer's filesystem: the caller's session conf
+    * (`sessionState.newHadoopConf()`), built once per call.
     */
-  def readSpark(s: SparkSession, paths: String*): DataFrame =
-    sparkSchema(s, paths).fold(s.read.parquet(paths: _*))(
+  def readSpark(s: SparkSession, conf: Configuration, paths: String*): DataFrame =
+    sparkSchema(s, conf, paths).fold(s.read.parquet(paths: _*))(
       s.read.schema(_).parquet(paths: _*))
 
   private def dataFiles(p: Path, fs: FileSystem): Seq[Path] =

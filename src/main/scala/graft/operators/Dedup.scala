@@ -810,6 +810,9 @@ object Dedup {
     bandTableFromShingles(withShingles(docs).select("doc_id", "shingles"),
       numHashes, bands)
 
+  private val BandMul = 1000003L
+  private val BandMod = 2147483629L
+
   private def bandTableFromShingles(sh: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
     val rows = numHashes / bands
@@ -817,7 +820,7 @@ object Dedup {
       graft.functions.TextExpressions.minhash_signature(col("shingles"), numHashes))
     val bandCols = (0 until bands).map { b =>
       val bh = (b * rows until (b + 1) * rows).foldLeft(lit(0L)) { (acc, j) =>
-        (acc * lit(1000003L) + element_at(col("sig"), j + 1)) % lit(2147483629L)
+        (acc * lit(BandMul) + element_at(col("sig"), j + 1)) % lit(BandMod)
       }
       struct(lit(b).as("band"), bh.as("bh"))
     }
@@ -848,7 +851,12 @@ object Dedup {
   /** The probe kernel shared by [[incrementalNearDups]] (history
     * recomputed in-line) and [[probeNearDupIndex]] (history loaded
     * from the persisted index) — one implementation, so the persisted
-    * path cannot drift from the recompute path it must equal.
+    * path cannot drift from the recompute path it must equal. The
+    * batch side is distributed: its bands and shingles are broadcast
+    * from the batch's own plan, so any batch size runs here.
+    * [[probeNearDupIndex]] takes it for batches over
+    * [[MaxDriverBatch]] docs and signs smaller ones on the driver
+    * ([[probeSigned]], pinned row-identical to this kernel).
     */
   private def probeCore(histBands: DataFrame, histShingles: DataFrame,
       batch: DataFrame, threshold: Double, numHashes: Int, bands: Int,
@@ -896,12 +904,120 @@ object Dedup {
     val bSh = batchShingles.select(col("doc_id").as("batch_id"), col("shingles").as("sa"))
     val hSh = histShingles.select(col("doc_id").as("hist_id"), col("shingles").as("sb"))
     hSh.join(broadcast(cands), "hist_id").join(bSh, "batch_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sa"), col("sb"))).cast("double") /
-          size(array_union(col("sa"), col("sb"))))
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") >= threshold)
       .select("batch_id", "hist_id", "jaccard")
       .orderBy("batch_id", "hist_id")
+  }
+
+  // exact Jaccard of the batch (`sa`) and history (`sb`) shingle sets
+  private val jaccard: Column =
+    size(array_intersect(col("sa"), col("sb"))).cast("double") /
+      size(array_union(col("sa"), col("sb")))
+
+  /** Largest batch [[probeNearDupIndex]] signs on the driver. Each doc
+    * adds `bands` keys and its shingle set to the plan as literals, so
+    * the cap bounds what planning a routed probe costs; a larger batch
+    * runs the distributed [[probeCore]].
+    */
+  private[operators] val MaxDriverBatch = 256
+
+  // A batch collected and signed on the driver. A doc id's position in
+  // `ids` is its group; `shingles(g)` holds one shingle set per batch
+  // row carrying that id (a duplicated id verifies every row, as the
+  // kernel's shingle join does); `groupsOf` maps each band key
+  // (band * 2^32 + bh, unique because |bh| < 2^31) to the groups
+  // whose docs fall in that bucket. Rows with a null id are dropped:
+  // the kernel's equi-joins drop them too.
+  private final case class SignedBatch(id: org.apache.spark.sql.types.StructField,
+      ids: Seq[Any], shingles: Seq[Seq[Seq[String]]], groupsOf: Map[Long, Seq[Int]])
+
+  /** The batch's doc ids, shingles and band keys, collected with
+    * `limit(cap + 1)` — a local batch (a LocalRelation) collects
+    * without a Spark job — and banded with [[bandTableFromShingles]]'
+    * arithmetic. None when the batch is over `cap` docs or its ids are
+    * not integers or strings (whose driver-side equality is the join's).
+    */
+  private def signBatch(batch: DataFrame, numHashes: Int, bands: Int,
+      cap: Int): Option[SignedBatch] = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+    val sel = withShingles(batch).select(col("doc_id"), col("shingles"),
+      graft.functions.TextExpressions.minhash_signature(col("shingles"), numHashes))
+    val id = sel.schema.head
+    val keyed = id.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+    val rows =
+      if (keyed && cap >= 0) sel.limit(cap + 1).collect() else Array.empty[org.apache.spark.sql.Row]
+    if (!keyed || rows.length > cap) None
+    else {
+      val group = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+      val shingles = scala.collection.mutable.ArrayBuffer.empty[Vector[Seq[String]]]
+      val groupsOf = scala.collection.mutable.HashMap.empty[Long, Vector[Int]]
+      val rowsPerBand = numHashes / bands
+      rows.filterNot(_.isNullAt(0)).foreach { r =>
+        val g = group.getOrElseUpdate(r.get(0), group.size)
+        if (g == shingles.size) shingles += Vector.empty
+        shingles(g) :+= (if (r.isNullAt(1)) null else r.getSeq[String](1))
+        if (!r.isNullAt(2)) {
+          val sig = r.getSeq[Long](2)
+          (0 until bands).foreach { b =>
+            val bh = (b * rowsPerBand until (b + 1) * rowsPerBand)
+              .foldLeft(0L)((acc, j) => (acc * BandMul + sig(j)) % BandMod)
+            val key = b.toLong * (1L << 32) + bh
+            val gs = groupsOf.getOrElse(key, Vector.empty)
+            if (!gs.contains(g)) groupsOf(key) = gs :+ g
+          }
+        }
+      }
+      Some(SignedBatch(id, group.keys.toSeq, shingles.toSeq, groupsOf.toMap))
+    }
+  }
+
+  /** [[probeCoreFromParts]] for a batch signed on the driver, as ONE
+    * lazy query with the batch side as literals, not broadcasts: the
+    * history band rows whose key is in the batch's key set (an InSet,
+    * not a semi-join) are counted per bucket by a window — a hit bucket
+    * keeps all its rows, so the `maxBucket` cut is the full-history
+    * count — then each key maps to its batch groups, and the distinct
+    * (group, hist_id) candidates are broadcast into the shingle scan
+    * for the same exact Jaccard. The result is at most
+    * |batch| × candidates rows, so it is ordered in one partition
+    * (`repartition(1)` + `sortWithinPartitions`) instead of by a range
+    * sort, whose sampling job re-ran the whole verify stage.
+    */
+  private def probeSigned(histBands: DataFrame, histShingles: DataFrame,
+      batch: SignedBatch, threshold: Double, maxBucket: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{InSet, KnownNotNull, Literal}
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types.ArrayType
+    val key = col("band").cast("long") * lit(1L << 32) + col("bh")
+    val cands = histBands
+      .filter(ColumnBridge.column(
+        // a HashSet, as Spark's own OptimizeIn builds: generated code
+        // casts the set to its class, which must survive serialization
+        InSet(ColumnBridge.expression(key),
+          scala.collection.immutable.HashSet.from[Any](batch.groupsOf.keys))))
+      .withColumn("_n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key)))
+      .filter(col("_n") <= maxBucket)
+      .select(explode(element_at(typedLit(batch.groupsOf), key)).as("_g"),
+        col("doc_id").as("hist_id"))
+      .distinct()
+    val ids = Literal.create(batch.ids, ArrayType(batch.id.dataType, batch.id.nullable))
+    val batchId = ColumnBridge.expression(
+      element_at(ColumnBridge.column(ids), col("_g") + 1))
+    histShingles.select(col("doc_id").as("hist_id"), col("shingles").as("sb"))
+      .join(broadcast(cands), "hist_id")
+      .withColumn("sa", explode(element_at(typedLit(batch.shingles), col("_g") + 1)))
+      .withColumn("jaccard", jaccard)
+      .filter(col("jaccard") >= threshold)
+      // the kernel's batch_id is the batch's doc_id column, nullability included
+      .select(ColumnBridge.column(if (batch.id.nullable) batchId else KnownNotNull(batchId))
+        .as("batch_id"), col("hist_id"), col("jaccard"))
+      .repartition(1)
+      .sortWithinPartitions("batch_id", "hist_id")
   }
 
   /** Persist a corpus's near-dup index — the band table plus the
@@ -926,7 +1042,7 @@ object Dedup {
     */
   def saveNearDupIndex(corpus: DataFrame, path: String,
       numHashes: Int = 32, bands: Int = 16): Unit = {
-    val hconf = corpus.sparkSession.sparkContext.hadoopConfiguration
+    val hconf = corpus.sparkSession.sessionState.newHadoopConf()
     Tree.save(path, hconf) {
       // and any legacy flat-layout root tables: a save is the documented
       // migration remedy, and for an index with right-to-erasure support
@@ -957,14 +1073,13 @@ object Dedup {
     * against the CURRENT geometry, re-read per attempt.
     */
   def appendNearDupIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
+    val conf = batch.sparkSession.sessionState.newHadoopConf()
     rejectLegacyLayout(path, conf)
     // one shingle pass feeds every attempt (signatures re-derive only
     // if the geometry changed)
     withShingleSet(batch)(sh =>
       Tree.append(path, conf, "stale-geometry bands") {
-        val (nh, b) = indexGeometry(s, path)
+        val (nh, b) = indexGeometry(path, conf)
         bdir => writeBatchTables(sh, bdir, nh, b)
       })
   }
@@ -1003,23 +1118,14 @@ object Dedup {
   // partition is still computed once (the first task to need it fills
   // the cache; the other job's task reads it). Sequentially the save
   // paid shingle-compute + band-compute + two write tails end to end.
-  // Failure semantics are unchanged: both futures are awaited, the
-  // first failure rethrows BEFORE the commit marker is touched.
+  // Both writes are awaited; the first failure rethrows BEFORE the
+  // commit marker is touched.
   private def writeBatchTables(sh: DataFrame, bdir: String,
-      numHashes: Int, bands: Int): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fBands = Future(bandTableFromShingles(sh, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$bdir/bands"))
-    val fSh = Future(sh.write.mode("overwrite").parquet(s"$bdir/shingles"))
-    // await BOTH (even when one failed) so no write is still in flight
-    // when the caller reacts to the failure
-    val r1 = scala.util.Try(Await.result(fBands, Duration.Inf))
-    val r2 = scala.util.Try(Await.result(fSh, Duration.Inf))
-    r1.get; r2.get
-  }
+      numHashes: Int, bands: Int): Unit =
+    graft.ingest.BatchTree.concurrently(
+      () => bandTableFromShingles(sh, numHashes, bands)
+        .write.mode("overwrite").parquet(s"$bdir/bands"),
+      () => sh.write.mode("overwrite").parquet(s"$bdir/shingles"))
 
   /** ROLLING-WINDOW retention for the persisted index — the time-axis
     * governance half next to [[forgetFromIndex]]'s by-key path, for
@@ -1040,17 +1146,17 @@ object Dedup {
     */
   def retireIndexBatches(s: SparkSession, path: String,
       keepLast: Int): Seq[Long] = {
-    val conf = s.sparkContext.hadoopConfiguration
+    val conf = s.sessionState.newHadoopConf()
     rejectLegacyLayout(path, conf)
     Tree.retire(path, conf, keepLast)
   }
 
   // geometry is a 1-row manifest: read driver-side (TinyParquet), no
   // Spark job — every append attempt and probe pays this read
-  private def indexGeometry(s: SparkSession, path: String): (Int, Int) = {
+  private def indexGeometry(path: String,
+      conf: org.apache.hadoop.conf.Configuration): (Int, Int) = {
     import graft.ingest.TinyParquet.IntCol
-    val m = graft.ingest.TinyParquet.read(s"$path/meta",
-      s.sparkContext.hadoopConfiguration,
+    val m = graft.ingest.TinyParquet.read(s"$path/meta", conf,
       Seq(IntCol("num_hashes"), IntCol("bands"))).head
     (m(0).asInstanceOf[Int], m(1).asInstanceOf[Int])
   }
@@ -1062,17 +1168,36 @@ object Dedup {
     * independent of how the history was accumulated. Batch signatures
     * are computed under the geometry stored IN the index (see
     * [[saveNearDupIndex]]) — a probe cannot silently mismatch it.
+    *
+    * ROUTED like [[VectorIndex.probeVectorIndex]]: a batch of at most
+    * [[MaxDriverBatch]] docs is collected once and signed on the
+    * driver ([[signBatch]]; a local batch starts no job), and the
+    * result is ONE lazy query with the batch as literals and no range
+    * sort ([[probeSigned]]: 5 jobs for a local batch, where the kernel
+    * runs 9 — three batch broadcasts and a sort sampling job fewer).
+    * Larger batches run the distributed [[probeCore]]. The two plans
+    * are pinned row-identical (NearDupRouteSpec), so the cap is a plan
+    * choice, not a correctness boundary.
     */
   def probeNearDupIndex(s: SparkSession, path: String, batch: DataFrame,
-      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
+    probeNearDupIndexUpTo(s, path, batch, threshold, maxBucket, MaxDriverBatch)
+
+  // [[probeNearDupIndex]] with the route's cap as a parameter: the
+  // route spec pins a cap of -1 (every batch takes the kernel) against
+  // the shipped one.
+  private[operators] def probeNearDupIndexUpTo(s: SparkSession, path: String,
+      batch: DataFrame, threshold: Double, maxBucket: Int, cap: Int): DataFrame = {
+    val conf = s.sessionState.newHadoopConf()
     // legacy check before indexGeometry's meta read errors first
-    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
-    val (nh, b) = indexGeometry(s, path)
+    rejectLegacyLayout(path, conf)
+    val (nh, b) = indexGeometry(path, conf)
     // logical erasure: tombstoned docs are invisible to every probe —
     // including the bucket-size counts, so a forgotten boilerplate doc
     // stops inflating its bucket immediately
-    val Seq(bands, sh) = Tree.read(s, path)
-    probeCore(bands, sh, batch, threshold, nh, b, maxBucket)
+    val Seq(bands, sh) = Tree.read(s, path, conf)
+    signBatch(batch, nh, b, cap).fold(probeCore(bands, sh, batch, threshold, nh, b, maxBucket))(
+      probeSigned(bands, sh, _, threshold, maxBucket))
   }
 
   /** Probe the NEWEST committed batch of a persisted index against the
@@ -1090,15 +1215,15 @@ object Dedup {
     */
   def probeNewestIndexBatch(s: SparkSession, path: String,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
+    val conf = s.sessionState.newHadoopConf()
     rejectLegacyLayout(path, conf)
     val dirs = Tree.liveDirs(path, conf)
     // tombstones filter BOTH sides: an erased doc in the newest batch
     // must neither be probed against history nor drive a drop set —
     // "invisible to every probe" (gov02) includes the probe side
-    val Seq(bands, sh) = Tree.read(s, path, dirs)
+    val Seq(bands, sh) = Tree.read(s, path, dirs, conf)
     val Seq(newBands, newSh) =
-      Tree.read(s, path, Seq(dirs.last)) // liveDirs ascend by batch id
+      Tree.read(s, path, Seq(dirs.last), conf) // liveDirs ascend by batch id
     probeCoreFromParts(bands, sh, newBands,
       newSh.select(col("doc_id"), col("shingles")), threshold, maxBucket)
   }
@@ -1117,7 +1242,7 @@ object Dedup {
     * replaces is a caller data-modeling error).
     */
   def forgetFromIndex(s: SparkSession, path: String, ids: DataFrame): Unit =
-    Tree.forget(path, ids, "doc_id")
+    Tree.forget(path, s.sessionState.newHadoopConf(), ids, "doc_id")
 
   /** PHYSICAL erasure: rewrite the index without the tombstoned docs'
     * band and shingle rows — the GDPR-compliance half a tombstone
@@ -1137,8 +1262,9 @@ object Dedup {
     * identical probe results (spec-pinned alongside the erasure case).
     */
   def vacuumIndex(s: SparkSession, path: String): Unit = {
-    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
-    Tree.vacuum(s, path)
+    val conf = s.sessionState.newHadoopConf()
+    rejectLegacyLayout(path, conf)
+    Tree.vacuum(s, path, conf)
   }
 
   /** BUCKET-SKEW AUDIT for the persisted near-dup index — the
@@ -1160,8 +1286,9 @@ object Dedup {
     */
   def auditIndexBuckets(s: SparkSession, path: String,
       cap: Int = 1000): DataFrame = {
-    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
-    Tree.readByBatch(s, path, "bands")
+    val conf = s.sessionState.newHadoopConf()
+    rejectLegacyLayout(path, conf)
+    Tree.readByBatch(s, path, "bands", conf)
       .groupBy(col("batch_id"), col("band"), col("bh"))
       .agg(count(lit(1)).as("n"))
       .groupBy("batch_id")
@@ -1195,7 +1322,7 @@ object Dedup {
         vacuumIndex(s, path)
         probeNearDupIndex(s, path, docs.filter(col("doc_id") % 7 === 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Some(s"""WITH t AS (SELECT doc_id, ${OracleSql.Toks} AS toks FROM documents),
       g AS (SELECT doc_id, ${OracleSql.Shingles3} AS shingles FROM t),
@@ -1243,7 +1370,7 @@ object Dedup {
         appendNearDupIndex(hist.filter(col("doc_id") % 3 === 0), path)
         probeNearDupIndex(s, path, docs.filter(col("doc_id") % 7 === 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     dd09.oracle, // the persisted path must agree with dd09's recompute
   )
@@ -1270,7 +1397,7 @@ object Dedup {
         require(retired == Seq(0L), s"expected to retire batch 0, got $retired")
         probeNearDupIndex(s, path, docs.filter(col("doc_id") % 7 === 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     dd09.oracle.map { o =>
       val anchored = "hb AS (SELECT * FROM band WHERE doc_id % 7 <> 3),"
@@ -1305,7 +1432,7 @@ object Dedup {
           .select(col("doc_id"), lit(boiler).as("text")), path)
         auditIndexBuckets(s, path, cap = 16)
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Some(s"""WITH src AS (SELECT doc_id,
           CASE WHEN doc_id % 7 = 3

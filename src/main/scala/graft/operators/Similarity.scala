@@ -820,12 +820,19 @@ object Similarity {
     val cellMatch = col("pcell") === col("cell") && col("qid") =!= col("cid")
     val cond = queryLabels
       .fold(cellMatch)(_ => cellMatch && col("qlabel") === col("label"))
-    coded.join(broadcast(probeTbl), cond)
+    val ranked = coded.join(broadcast(probeTbl), cond)
       .select(col("qid"), col("cid"), sc.as(scoreName))
       .withColumn("rn", row_number().over(w).cast("bigint"))
       .filter(col("rn") <= k)
       .select("qid", "cid", scoreName, "rn")
-      .orderBy("qid", "rn")
+    // A finite k bounds the result to k·nQ rows, and the rank filter
+    // becomes a window group limit applied before the rank exchange,
+    // so the window stage's input is bounded too: one task orders it,
+    // with no range-sort sampling job and map stage. The k = MaxValue
+    // candidate legs (the refine probes) keep every probed-cell row
+    // and stay a distributed sort.
+    if (k < Int.MaxValue) ranked.coalesce(1).sortWithinPartitions("qid", "rn")
+    else ranked.orderBy("qid", "rn")
   }
 
   /** Bounded collect of the query vectors (nQueries rows). */

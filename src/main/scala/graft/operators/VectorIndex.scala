@@ -51,7 +51,7 @@ object VectorIndex {
     */
   def saveVectorIndex(emb: DataFrame, path: String, nCells: Int = 16,
       nSub: Int = 8, subDim: Int = 8, nCodes: Int = 16): Unit = {
-    val conf = emb.sparkSession.sparkContext.hadoopConfiguration
+    val conf = emb.sparkSession.sessionState.newHadoopConf()
     Tree.save(path, conf) {
       // ONE bounded collect serves training AND the persisted id list
       val pinned = Similarity.pinnedTrainRows(emb, nCells + nCodes)
@@ -91,12 +91,13 @@ object VectorIndex {
     * against the CURRENT model, re-loaded per attempt, so stale-model
     * codes can never land in a retrained index.
     */
-  def appendVectorIndex(batch: DataFrame, path: String): Unit =
-    Tree.append(path, batch.sparkSession.sparkContext.hadoopConfiguration,
-        "stale-model codes") {
-      val model = loadModel(batch.sparkSession, path)
+  def appendVectorIndex(batch: DataFrame, path: String): Unit = {
+    val conf = batch.sparkSession.sessionState.newHadoopConf()
+    Tree.append(path, conf, "stale-model codes") {
+      val model = loadModel(path, conf)
       bdir => writeCodes(batch, model, bdir)
     }
+  }
 
   private def writeCodes(batch: DataFrame, model: Similarity.IvfPqModel,
       bdir: String): Unit =
@@ -121,8 +122,10 @@ object VectorIndex {
     * every probe). Both probe entries read through here so the
     * protocol can never diverge between them.
     */
-  private def loadCoded(s: SparkSession, path: String): (Similarity.IvfPqModel, DataFrame) =
-    (loadModel(s, path), Tree.read(s, path).head)
+  private def loadCoded(s: SparkSession, path: String): (Similarity.IvfPqModel, DataFrame) = {
+    val conf = s.sessionState.newHadoopConf()
+    (loadModel(path, conf), Tree.read(s, path, conf).head)
+  }
 
   /** Bounded query collect shared by the LUT probes: the limit(cap+1)
     * caps what can ever reach the driver BEFORE the overflow is
@@ -278,9 +281,12 @@ object VectorIndex {
     * files, no Spark job per table — a probe used to pay three
     * scheduler round-trips before its first real stage.
     */
-  private[operators] def loadModel(s: SparkSession, path: String): Similarity.IvfPqModel = {
+  private[operators] def loadModel(s: SparkSession, path: String): Similarity.IvfPqModel =
+    loadModel(path, s.sessionState.newHadoopConf())
+
+  private def loadModel(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Similarity.IvfPqModel = {
     import graft.ingest.TinyParquet._
-    val conf = s.sparkContext.hadoopConfiguration
     val m = graft.ingest.TinyParquet.read(s"$path/meta", conf,
       Seq(IntCol("n_cells"), IntCol("n_sub"), IntCol("sub_dim"))).head
     val (nCells, nSub, subDim) =
@@ -318,20 +324,20 @@ object VectorIndex {
     // a pre-train_ids index must fail LOUDLY with its remedy (the
     // rejectLegacyLayout idiom), not with a raw path-not-found from
     // the parquet reader
-    require(graft.ingest.FileUtils.exists(s"$path/train_ids",
-        s.sparkContext.hadoopConfiguration),
+    val conf = s.sessionState.newHadoopConf()
+    require(graft.ingest.FileUtils.exists(s"$path/train_ids", conf),
       s"$path predates the train_ids manifest; re-save it with " +
         "saveVectorIndex (or rebuildVectorIndex) before erasing from it")
     // membership against the STORED training set (not a dense-id
     // heuristic): a rebuilt index's training ids have gaps
     val trainIds = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .join(TinyParquet.readSpark(s, s"$path/train_ids"), Seq("vec_id"), "left_semi")
+      .join(TinyParquet.readSpark(s, conf, s"$path/train_ids"), Seq("vec_id"), "left_semi")
       .count()
     require(trainIds == 0L,
       s"$trainIds forget ids are quantizer-training vectors — their " +
         "coordinates are embedded in centroids/codebook; rebuild the " +
         "index without them (rebuildVectorIndex) instead of tombstoning")
-    Tree.forget(path, ids, "vec_id")
+    Tree.forget(path, conf, ids, "vec_id")
   }
 
   /** PHYSICAL erasure: rewrite the code table without tombstoned rows
@@ -347,7 +353,7 @@ object VectorIndex {
     * pay.
     */
   def vacuumVectorIndex(s: SparkSession, path: String): Unit =
-    Tree.vacuum(s, path)
+    Tree.vacuum(s, path, s.sessionState.newHadoopConf())
 
   /** The training-id refusal remedy, executed ([[forgetFromVectorIndex]]
     * names it): retrain the quantizers and re-encode on `corpus` MINUS
@@ -385,8 +391,9 @@ object VectorIndex {
       subDim: Int = -1, nCodes: Int = -1): Unit = {
     val s = corpus.sparkSession
     import s.implicits._
+    val conf = s.sessionState.newHadoopConf()
     // the stored geometry, parsed and cross-checked once (loadModel)
-    val m = loadModel(s, path)
+    val m = loadModel(path, conf)
     val (tc, ts, td, tk) = (
       if (nCells > 0) nCells else m.nCells,
       if (nSub > 0) nSub else m.nSub,
@@ -405,7 +412,7 @@ object VectorIndex {
     // materialized BEFORE the re-save deletes the tombstone parquet it
     // reads from (the vacuumIndex localCheckpoint rationale)
     val gone = erase.select(col("vec_id").cast("long").as("vec_id"))
-      .unionByName(Tree.tombstones(s, path)
+      .unionByName(Tree.tombstones(s, path, conf)
         .fold(Seq.empty[Long].toDF("vec_id"))(_.select(col("cid").as("vec_id"))))
       .distinct()
       .localCheckpoint(true)
@@ -438,11 +445,12 @@ object VectorIndex {
   def auditVectorIndexDrift(s: SparkSession, path: String, raw: DataFrame,
       threshold: Double, sampleMod: Int = 1): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val model = loadModel(s, path)
+    val conf = s.sessionState.newHadoopConf()
+    val model = loadModel(path, conf)
     // tombstoned rows are invisible to every probe (loadCoded), so
     // they must not steer the rebuild trigger either — a logically
     // erased outlier is leaving at the next vacuum, not drift
-    val codes = Tree.readByBatch(s, path, "codes")
+    val codes = Tree.readByBatch(s, path, "codes", conf)
     val sampled = codes.filter(pmod(col("cid"), lit(sampleMod)) === 0)
       .join(raw.select(col("vec_id").cast("long").as("cid"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")),
@@ -492,7 +500,7 @@ object VectorIndex {
     */
   def retireVectorIndexBatches(s: SparkSession, path: String,
       keepLast: Int): Seq[Long] =
-    Tree.retire(path, s.sparkContext.hadoopConfiguration, keepLast)
+    Tree.retire(path, s.sessionState.newHadoopConf(), keepLast)
 
   // Save the WHOLE corpus, then probe the loaded index: the output
   // must be byte-identical to sim07's from-scratch search (they share
@@ -507,7 +515,7 @@ object VectorIndex {
         saveVectorIndex(emb, path)
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle,
   )
@@ -527,7 +535,7 @@ object VectorIndex {
         appendVectorIndex(emb.filter(col("vec_id") >= 32 && col("vec_id") % 3 =!= 0), path)
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle,
   )
@@ -555,7 +563,7 @@ object VectorIndex {
         vacuumVectorIndex(s, path)
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val anchored = "WHERE a.cid <> p.qid"
@@ -583,7 +591,7 @@ object VectorIndex {
         probeVectorIndexFiltered(s, path, emb.filter(col("vec_id") < 3),
           emb.select("vec_id", "label"))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val anchored = "WHERE a.cid <> p.qid"
@@ -627,7 +635,7 @@ object VectorIndex {
           emb.filter(col("vec_id") === 20).select("vec_id"))
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val a1 = "c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings),"
@@ -672,7 +680,7 @@ object VectorIndex {
             col("adist"), (col("adist") <= lit(1.36)).as("is_dup"))
           .orderBy("vec_id")
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       // anchored edits (never bare "cid < 3" — it is a substring of
@@ -708,7 +716,7 @@ object VectorIndex {
         saveVectorIndex(emb, path)
         probeVectorIndexMips(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       // keep sim07's index-construction prefix (c..codes CTEs) intact;
@@ -976,7 +984,7 @@ object VectorIndex {
       try {
         saveVectorIndex(emb, path)
         probeVectorIndexBulk(s, path, emb).localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val pAnchor =
@@ -1013,7 +1021,7 @@ object VectorIndex {
         require(retired == Seq(0L), s"expected to retire batch 0, got $retired")
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val anchored = "WHERE a.cid <> p.qid"
@@ -1057,7 +1065,7 @@ object VectorIndex {
           .unionByName(shifted)
         auditVectorIndexDrift(s, path, raw, threshold = 8.0, sampleMod = 2)
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val cAnchor =
@@ -1147,7 +1155,7 @@ object VectorIndex {
             "max_err", "drifted")
           .orderBy("audit_round", "batch_id")
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val cAnchor =
@@ -1234,7 +1242,7 @@ object VectorIndex {
       try {
         saveVectorIndex(emb, path)
         probeVectorIndexBulkMips(s, path, emb).localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     sim18Oracle.map { o =>
       val qAnchor = "q AS (SELECT cid AS qid, cv AS qv FROM c WHERE cid < 3),"
@@ -1262,7 +1270,7 @@ object VectorIndex {
         probeVectorIndexBulkFiltered(s, path, emb,
           emb.select("vec_id", "label"))
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val pAnchor =
@@ -1299,7 +1307,7 @@ object VectorIndex {
         saveVectorIndex(emb, path)
         probeVectorIndexBulkRefined(s, path, emb, emb, k = 5, topR = 10)
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     Similarity.sim07Oracle.map { o =>
       val pAnchor =
@@ -1348,7 +1356,7 @@ object VectorIndex {
       val emb = Tables(s, dir).embeddings
       val path = java.nio.file.Files
         .createTempDirectory("graft_sim27_vindex").toString
-      val conf = s.sparkContext.hadoopConfiguration
+      val conf = s.sessionState.newHadoopConf()
       try {
         saveVectorIndex(emb.filter(col("vec_id") < 400), path,
           nCells = 8, nSub = 8, subDim = 8, nCodes = 8)
@@ -1396,7 +1404,7 @@ object VectorIndex {
         probeVectorIndexBulkFiltered(s, path, emb,
           emb.select("vec_id", "label"), mips = true)
           .localCheckpoint(eager = true)
-      } finally rmr(path, s.sparkContext.hadoopConfiguration)
+      } finally rmr(path, s.sessionState.newHadoopConf())
     },
     sim18Oracle.map { o =>
       val qAnchor = "q AS (SELECT cid AS qid, cv AS qv FROM c WHERE cid < 3),"

@@ -93,4 +93,27 @@ class BatchTreeSpec extends SparkSpec {
       assert(none.getMessage.contains("no live committed index batches"))
     }
   }
+
+  test("vacuum awaits every table write and leaves a failed stage unsealed") {
+    import spark.implicits._
+    withRoot { root =>
+      val two = BatchTree("id", Seq("a", "b"))
+      two.append(root, conf, "stale rows") { bdir =>
+        Seq(1L, 2L).toDF("id").write.parquet(s"$bdir/a")
+        Seq(1L, 2L).toDF("id").write.parquet(s"$bdir/b")
+        // a part file whose id is a string: its table plans from one
+        // footer, then fails the write's scan
+        Seq("x").toDF("id").write.mode("append").parquet(s"$bdir/b")
+      }
+      val live = two.liveDirs(root, conf)
+      intercept[Exception](two.vacuum(spark, root, conf))
+      val stage = s"$root/batches_g1/b0"
+      assert(FileUtils.exists(s"$stage/a/_SUCCESS", conf),
+        "the sibling table's write must have finished before the failure surfaced")
+      assert(!FileUtils.isSealed(stage, conf), "a failed vacuum must not seal its stage")
+      assert(Generations.currentGen(root, conf) == 0L && two.liveDirs(root, conf) == live,
+        "the old generation keeps serving")
+      assert(!FileUtils.exists(s"$root/_SAVING", conf), "the lease is released")
+    }
+  }
 }

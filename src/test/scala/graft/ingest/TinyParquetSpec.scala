@@ -80,15 +80,15 @@ class TinyParquetSpec extends SparkSpec {
     }
     for (p <- Seq(s"$b0/bands", s"$b0/shingles", s"$vi/train_ids")) {
       val inferred = spark.read.parquet(p).schema
-      assert(readSpark(spark, p).schema == inferred, p)
-      assert(sparkSchema(spark, Seq(p)).map(nullable).contains(inferred), p)
-      assert(readSpark(spark, p).collect().toSet == spark.read.parquet(p).collect().toSet, p)
+      assert(readSpark(spark, conf, p).schema == inferred, p)
+      assert(sparkSchema(spark, conf, Seq(p)).map(nullable).contains(inferred), p)
+      assert(readSpark(spark, conf, p).collect().toSet == spark.read.parquet(p).collect().toSet, p)
     }
     // no data file: Spark's own read, and its own error
     val empty = root.resolve("empty").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
-    assert(sparkSchema(spark, Seq(empty)).isEmpty)
-    intercept[org.apache.spark.sql.AnalysisException](readSpark(spark, empty))
+    assert(sparkSchema(spark, conf, Seq(empty)).isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException](readSpark(spark, conf, empty))
     FileUtils.rmr(root.toString, conf)
   }
 }
